@@ -1,36 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Plan every exchange wide and let AQE coalesce DOWN to the data:
-      // reducer width then tracks shuffle volume at any scale. At sf0.1
-      // this is noise-neutral (two interleaved A/B pairs, SCALE.md
-      // §"100× scale canary"); at the 100× canary it is what keeps the
-      // heavy dedup shuffles out of sort-spill (90.7 → 51.6 s).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Without this, cached-plan materialization is EXEMPT from AQE
-      // reducer coalescing (Spark preserves the cached plan's output
-      // partitioning), so every `.persist` under the 512-wide default
-      // above materialized its shuffles 512 wide and stored 512-block
-      // cache entries — the round-10 recsys_item_item 3.2→81.3 s driver
-      // regression (VERDICT r10 item 1; graft.core.Memo scaladoc).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // Same `k=v;k=v` conf passthrough as BenchOne — lets scale/skew A/Bs
-    // drive the FULL bench without code edits.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     // Host-load self-annotation (VERDICT r12 item 3): two consecutive
     // rounds the driver's headline was dominated by external host
     // contention that only an after-the-fact interleaved A/B could
@@ -95,8 +67,7 @@ object Bench {
     // strategy flips with input size (e.g. a join crossing the broadcast
     // threshold) still compile those stages in the timed run. The timed
     // runs perform every byte of sf-scale IO, shuffle and compute.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      sfDir.replaceAll("sf[0-9.]+/?$", "sf0.001"))
+    val warmDir = sfDir.replaceAll("sf[0-9.]+/?$", "sf0.001")
     if (warmDir != sfDir && new java.io.File(warmDir).isDirectory) {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
         try fn(spark, warmDir).count() catch { case _: Throwable => () }

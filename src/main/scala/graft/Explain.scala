@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints formatted physical plans for selected queries so
   * pushdown / broadcast / whole-stage-codegen shape is reviewable.
   * Usage: runMain graft.Explain <sfDir> [queryName ...]
@@ -23,12 +21,7 @@ object Explain {
       "asof_join_forward", "feature_trailing_distinct", "vocab_pmi",
       "privacy_t_closeness", "graph_modularity",
       "recsys_holdout_hitrate", "graph_robustness")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -197,12 +197,7 @@ object PlanLint {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     val flagged = sweep(spark, sfDir)
     flagged.toSeq.sortBy(_._1).foreach { case (name, fs) =>
       println(s"$name: " + fs.map(f => f.kind + " | " + f.detail).mkString("; "))

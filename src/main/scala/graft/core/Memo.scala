@@ -10,8 +10,8 @@ import org.apache.spark.storage.StorageLevel
   * near-dup pair table). One place owns the persist decision instead of
   * N private `ConcurrentHashMap`s, for three reasons:
   *
-  *  1. '''The round-10 regression class.''' Under the bench entry
-  *     points' wide-then-coalesce AQE default
+  *  1. '''The round-10 regression class.''' Under the entry points'
+  *     wide-then-coalesce AQE default
   *     (`coalescePartitions.initialPartitionNum=512`), cached-plan
   *     materialization SKIPS partition coalescing unless
   *     `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`
@@ -20,8 +20,8 @@ import org.apache.spark.storage.StorageLevel
   *     build. A memoized `.persist` therefore materialized every one of
   *     its shuffles 512 wide and stored a 512-block cache entry
   *     (recsys_item_item 3.2 → 81.3 s on the round-10 driver bench).
-  *     Bench / BenchOne / Verify now set that conf; routing every memo
-  *     through here keeps the fix and its rationale in one file.
+  *     [[Session]] sets that conf for every entry point; routing every
+  *     memo through here keeps the fix and its rationale in one file.
   *  2. '''Attribution.''' Whichever gate sorts first in its family pays
   *     the cache build inside its own timing. [[drainBuilt]] lets Bench
   *     stamp a per-query `cache_cold` marker in the diagnostic JSON so
@@ -177,8 +177,9 @@ object Memo {
   }
 
   /** Unpersist and forget every entry (any session) keyed under `dir` —
-    * the hook for tools that rewrite the parquet beneath a cached data
-    * dir (e.g. ScaleCanary regenerating a fixture in place). Without
+    * the hook for a tool that rewrites the parquet beneath a cached data
+    * dir in a [[Session]] it keeps open (e.g. regenerating a scaled
+    * fixture in place). Without
     * this, the immutable-fixture assumption above would serve stale
     * rows for the rest of the session. */
   def clearDir(dir: String): Unit = {

@@ -1,7 +1,6 @@
 package graft.etl
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end demo of the flagship pipeline: builds a miniature
@@ -13,12 +12,7 @@ object EtlDemo {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse(
       Files.createTempDirectory("graft-etl-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     import spark.implicits._
 
     val system = "acme_health"

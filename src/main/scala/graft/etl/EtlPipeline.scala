@@ -66,9 +66,7 @@ object EtlPipeline {
         (WideExtractor.extractFile(spark, rawPath, hospitalName, zipCode),
           MrfCsv.readMetadata(spark, rawPath))
       case "json" =>
-        val mrf = JsonExtractor.readMrf(spark, rawPath)
-        (JsonExtractor.extract(mrf, hospitalName, zipCode),
-          JsonExtractor.metadata(mrf))
+        JsonExtractor.extractFile(spark, rawPath, hospitalName, zipCode)
     }
     val extractedPath = s"$baseDir/data/extracted data/$system/${campusId}_extracted"
     canonical.write.mode(SaveMode.Overwrite)
@@ -83,64 +81,67 @@ object EtlPipeline {
     // flip on garbage input is worse than an error.
     require(extractedRows > 0,
       s"Extraction produced 0 canonical rows for campus '$campusId' from $rawPath")
+    // Both caches are released however the run ends: a long-lived fleet
+    // driver must not keep a failed campus's frames pinned.
     val preDedup = Cleaning.cleanAllPreDedup(extracted).cache()
-    val preDedupRows = preDedup.count()
     val tagged = Rules.tagViolations(Cleaning.dedup(preDedup)).cache()
-    val (clean, violations) = Rules.split(tagged)
+    try {
+      val preDedupRows = preDedup.count()
+      val (clean, violations) = Rules.split(tagged)
 
-    val cleanedPath = s"$baseDir/data/cleaned data/$system/${campusId}_cleaned"
-    val quarantinePath = s"$baseDir/data/logs/rules violations/$system/${campusId}_rules_violated"
-    clean.write.mode(SaveMode.Overwrite).option("header", "true").csv(cleanedPath)
-    // Optionally land the cleaned rows in the partitioned lake (the
-    // cross-hospital analytical sink; per-campus CSVs remain the reference-
-    // layout artifacts).
-    lakePath.foreach(lp =>
-      graft.meta.Lake.writeCharges(
-        spark.read.option("header", "true").schema(Schemas.canonicalIngest)
-          .csv(cleanedPath),
-        lp, system, campusId))
-    violations.write.mode(SaveMode.Overwrite)
-      .option("header", "true").csv(quarantinePath) // S10
+      val cleanedPath = s"$baseDir/data/cleaned data/$system/${campusId}_cleaned"
+      val quarantinePath = s"$baseDir/data/logs/rules violations/$system/${campusId}_rules_violated"
+      clean.write.mode(SaveMode.Overwrite).option("header", "true").csv(cleanedPath)
+      // Optionally land the cleaned rows in the partitioned lake (the
+      // cross-hospital analytical sink; per-campus CSVs remain the reference-
+      // layout artifacts).
+      lakePath.foreach(lp =>
+        graft.meta.Lake.writeCharges(
+          spark.read.option("header", "true").schema(Schemas.canonicalIngest)
+            .csv(cleanedPath),
+          lp, system, campusId))
+      violations.write.mode(SaveMode.Overwrite)
+        .option("header", "true").csv(quarantinePath) // S10
 
-    val summary = Rules.summarize(tagged)
-    val summaryRow = summary.head()
-    val cleanRows = summaryRow.getAs[Long]("total_rows_cleaned")
-    // Duplicates dropped = rows removed by dedup itself (violation rows are
-    // counted as distinct tagged rows, not per-rule, for this delta).
-    val violationRows = violations.count()
-    val dupsDropped = preDedupRows - (cleanRows + violationRows)
+      val summary = Rules.summarize(tagged)
+      val summaryRow = summary.head()
+      val cleanRows = summaryRow.getAs[Long]("total_rows_cleaned")
+      // Duplicates dropped = rows removed by dedup itself (violation rows are
+      // counted as distinct tagged rows, not per-rule, for this delta).
+      val violationRows = violations.count()
+      val dupsDropped = preDedupRows - (cleanRows + violationRows)
 
-    // S11 — devlog append (seq = ms timestamp for L1 ordering). The 4dp
-    // devlog rounding (cleaning_utils.py:231) is what flows to the registry
-    // and the run result.
-    val meta = Devlog.metadataFromSummary(summary, dupsDropped)
-    val score = meta.final_transparency_score
-    val devlogPath = s"$baseDir/data/logs/devlogs/$system/${campusId}_devlog"
-    Devlog.append(spark, devlogPath, Devlog.DevlogEntry(
-      campusId,
-      mrfMeta.getOrElse("hospital_address", field("hospital_address")),
-      mrfMeta.getOrElse("version", ""),
-      mrfMeta.getOrElse("last_updated_on", ""),
-      meta.final_transparency_score,
-      devlogSeq(), meta))
+      // S11 — devlog append (seq = ms timestamp for L1 ordering). The 4dp
+      // devlog rounding (cleaning_utils.py:231) is what flows to the registry
+      // and the run result.
+      val meta = Devlog.metadataFromSummary(summary, dupsDropped)
+      val score = meta.final_transparency_score
+      val devlogPath = s"$baseDir/data/logs/devlogs/$system/${campusId}_devlog"
+      Devlog.append(spark, devlogPath, Devlog.DevlogEntry(
+        campusId,
+        mrfMeta.getOrElse("hospital_address", field("hospital_address")),
+        mrfMeta.getOrElse("version", ""),
+        mrfMeta.getOrElse("last_updated_on", ""),
+        meta.final_transparency_score,
+        devlogSeq(), meta))
 
-    // S12/J4 — registry refresh (collect-then-rewrite: the registry is a
-    // small dimension and the source path is being overwritten).
-    val updated = Devlog.updateRegistry(registry, Devlog.latest(spark, devlogPath),
-      campusId, processedBy, Devlog.nowString(spark))
-    val frozen = spark.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(updated.collect(): _*)),
-      updated.schema)
-    frozen.write.mode(SaveMode.Overwrite).parquet(registryPath)
+      // S12/J4 — registry refresh (collect-then-rewrite: the registry is a
+      // small dimension and the source path is being overwritten).
+      val updated = Devlog.updateRegistry(registry, Devlog.latest(spark, devlogPath),
+        campusId, processedBy, Devlog.nowString(spark))
+      val frozen = spark.createDataFrame(
+        new java.util.ArrayList(java.util.Arrays.asList(updated.collect(): _*)),
+        updated.schema)
+      frozen.write.mode(SaveMode.Overwrite).parquet(registryPath)
 
-    // A11 — output size bookkeeping via Hadoop FS.
-    val fs = new Path(cleanedPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val outputMb = fs.getContentSummary(new Path(cleanedPath)).getLength / 1024.0 / 1024.0
+      // A11 — output size bookkeeping via Hadoop FS.
+      val fs = new Path(cleanedPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val outputMb = fs.getContentSummary(new Path(cleanedPath)).getLength / 1024.0 / 1024.0
 
-    preDedup.unpersist(); tagged.unpersist()
-    RunResult(campusId, system, structure, extractedRows, cleanRows,
-      violationRows, dupsDropped, score, extractedPath, cleanedPath,
-      quarantinePath, outputMb)
+      RunResult(campusId, system, structure, extractedRows, cleanRows,
+        violationRows, dupsDropped, score, extractedPath, cleanedPath,
+        quarantinePath, outputMb)
+    } finally { preDedup.unpersist(); tagged.unpersist() }
   }
 
   /** Devlog ordering value: nanoseconds since epoch (millis would tie for

@@ -64,6 +64,10 @@ object JsonExtractor {
   val sciSchema: StructType = mrfSchema("standard_charge_information")
     .dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
 
+  /** The MRF top-level keys the devlog records (json_sampler.py:23-33). */
+  val MetadataKeys: Seq[String] = Seq("hospital_name", "hospital_location",
+    "hospital_address", "last_updated_on", "version")
+
   /** File size above which [[extractFile]] abandons the whole-file
     * multiLine read for the streamed split. A multiLine JSON document is
     * ONE Spark row — the entire standard_charge_information array
@@ -81,11 +85,12 @@ object JsonExtractor {
   /** One streaming pass (Jackson, O(element) memory) over a huge MRF:
     * writes each standard_charge_information element as one JSON line
     * under `outDir` and returns the top-level scalar fields (the devlog
-    * metadata) read in the same pass — the ijson shape the reference
-    * uses for multi-GB files (json_sampler.py), kept OFF the default
-    * path for files where whole-file parsing is cheaper. Runs where the
-    * file is readable (driver here; inside a mapPartitions over file
-    * paths on a real cluster — one hospital file per task). */
+    * metadata, JSON null as "" like [[metadata]]) read in the same pass
+    * — the ijson shape the reference uses for multi-GB files
+    * (json_sampler.py), kept OFF the default path for files where
+    * whole-file parsing is cheaper. Runs where the file is readable
+    * (driver here; inside a mapPartitions over file paths on a real
+    * cluster — one hospital file per task). */
   def splitMrf(path: String, outDir: String): Map[String, String] = {
     import com.fasterxml.jackson.core.JsonToken
     import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -109,6 +114,8 @@ object JsonExtractor {
             val node: JsonNode = mapper.readTree(parser)
             out.write(node.toString); out.newLine()
           }
+        } else if (parser.currentToken() == JsonToken.VALUE_NULL) {
+          meta(field) = ""
         } else if (parser.currentToken().isScalarValue) {
           meta(field) = parser.getText
         } else parser.skipChildren()
@@ -173,45 +180,60 @@ object JsonExtractor {
     exploded.select(cols: _*)
   }
 
-  /** Two-regime file entry: whole-file multiLine parse below
-    * [[WholeFileThresholdBytes]] (one row, cheapest, byte-compatible
-    * with the reference contract), streamed split above it (bounded
-    * rows, parallel parse — the only shape that survives a multi-GB
-    * hospital document on a fixed executor heap). Identical canonical
-    * output by construction — extractFromSci is the shared tail; pinned
-    * by ExtractorSpec's regime-parity test and the unchanged
-    * extract_json_canonical oracle. The split scratch is keyed by
-    * (name, length, mtime) so a rewritten fixture re-splits. */
-  def extractFile(spark: SparkSession, path: String,
-      hospitalName: String, zipCode: String): DataFrame = {
-    val f = new java.io.File(path)
-    if (f.length() <= WholeFileThresholdBytes)
-      extract(readMrf(spark, path), hospitalName, zipCode)
-    else {
-      val scratch = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft-mrf-split-${f.getName}-${f.length()}-${f.lastModified()}")
-      val done = new java.io.File(scratch, "_done")
-      if (!done.exists()) {
-        splitMrf(path, scratch.getAbsolutePath)
-        done.createNewFile()
-      }
-      val rows = spark.read.schema(sciSchema)
-        .json(new java.io.File(scratch, "sci.jsonl").getAbsolutePath)
-      extractFromSci(rows.select(struct(
-          col("description"), col("drug_information"),
-          col("code_information"), col("standard_charges")).as("sci")),
-        hospitalName, zipCode)
-    }
+  /** Two-regime file entry: canonical rows plus the devlog metadata
+    * ([[MetadataKeys]], "" when absent or null). Files up to
+    * [[WholeFileThresholdBytes]] take [[extractWholeFile]], larger ones
+    * [[extractStreamed]]; the two give identical rows and metadata,
+    * pinned by ExtractorSpec's regime-parity test and the unchanged
+    * extract_json_canonical oracle. */
+  def extractFile(spark: SparkSession, path: String, hospitalName: String,
+      zipCode: String): (DataFrame, Map[String, String]) =
+    if (new java.io.File(path).length() <= WholeFileThresholdBytes)
+      extractWholeFile(spark, path, hospitalName, zipCode)
+    else extractStreamed(spark, path, hospitalName, zipCode)
+
+  /** Whole-file multiLine parse: one row, cheapest, byte-compatible with
+    * the reference contract. */
+  def extractWholeFile(spark: SparkSession, path: String,
+      hospitalName: String, zipCode: String): (DataFrame, Map[String, String]) = {
+    val mrf = readMrf(spark, path)
+    (extract(mrf, hospitalName, zipCode), metadata(mrf))
   }
 
-  /** Devlog metadata from the MRF top level (json_sampler.py:23-33 keys). */
+  /** Streamed split: bounded rows, parallel parse — the only shape that
+    * survives a multi-GB hospital document on a fixed executor heap.
+    * The split scratch is keyed by (name, length, mtime) so a rewritten
+    * file re-splits; the metadata file is written last and marks the
+    * split complete. */
+  def extractStreamed(spark: SparkSession, path: String,
+      hospitalName: String, zipCode: String): (DataFrame, Map[String, String]) = {
+    import scala.jdk.CollectionConverters._
+    val f = new java.io.File(path)
+    val scratch = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-mrf-split-${f.getName}-${f.length()}-${f.lastModified()}")
+    val metaFile = new java.io.File(scratch, "_meta.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    if (!metaFile.exists()) {
+      val all = splitMrf(path, scratch.getAbsolutePath)
+      mapper.writeValue(metaFile,
+        MetadataKeys.map(k => k -> all.getOrElse(k, "")).toMap.asJava)
+    }
+    val meta = mapper.readValue(metaFile, classOf[java.util.Map[String, String]])
+      .asScala.toMap
+    val rows = spark.read.schema(sciSchema)
+      .json(new java.io.File(scratch, "sci.jsonl").getAbsolutePath)
+    (extractFromSci(rows.select(struct(
+        col("description"), col("drug_information"),
+        col("code_information"), col("standard_charges")).as("sci")),
+      hospitalName, zipCode), meta)
+  }
+
+  /** Devlog metadata from the MRF top level ([[MetadataKeys]]). */
   def metadata(mrf: DataFrame): Map[String, String] = {
-    val rows = mrf.select(col("hospital_name"), col("hospital_location"),
-      col("hospital_address"), col("last_updated_on"), col("version")).take(1)
+    val rows = mrf.select(MetadataKeys.map(col): _*).take(1)
     require(rows.nonEmpty, "JSON MRF parsed to zero rows (empty or malformed file)")
     val row = rows.head
-    Seq("hospital_name", "hospital_location", "hospital_address",
-      "last_updated_on", "version").zipWithIndex.map { case (k, i) =>
+    MetadataKeys.zipWithIndex.map { case (k, i) =>
       k -> Option(row.getString(i)).getOrElse("")
     }.toMap
   }

@@ -1029,8 +1029,8 @@ object Graph {
     // (sc.setCheckpointDir — a cluster deployment's reliable store),
     // the loops automatically write RELIABLE checkpoints instead:
     // executor loss then costs a re-read, not the job. Exercised by
-    // ExecutorLossCheck (executor JVM halted mid-run under
-    // local-cluster) and the reliable-mode parity spec.
+    // the round-15 executor-loss screen (executor JVM halted mid-run
+    // under local-cluster; SCALE.md) and the reliable-mode parity spec.
     val rdd =
       if (spark.sparkContext.getCheckpointDir.isDefined) {
         val r = df.rdd

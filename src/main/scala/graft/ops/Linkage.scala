@@ -177,7 +177,7 @@ object Linkage {
     // (len× explode, then the variant join probes with a levenshtein
     // residual), so those 1-2 tasks would carry the whole neighborhood
     // search. Measured at sf0.1: the collapse put one 2-task 10.6 s
-    // stage on the trace's critical path (BenchOne TASK_STATS); pinning
+    // stage on the trace's critical path (per-stage task stats); pinning
     // the fan-out at defaultParallelism restores the old scan-side
     // parallelism at the cost of one ~180k-row exchange.
     val groups = named.groupBy(col("__s")).agg(min(col("id")).as("rep"))

@@ -143,7 +143,7 @@ object CleanQueries {
     "etl_flagship_trace" -> ((s, dir) => {
       import graft.meta.Devlog
       val path = JsonMrfFixture.writeFixture(s, dir)
-      val canonical = graft.extract.JsonExtractor.extractFile(
+      val (canonical, _) = graft.extract.JsonExtractor.extractFile(
         s, path, JsonMrfFixture.HospitalName, JsonMrfFixture.Zip)
       val t = Rules.tagViolations(Cleaning.cleanAll(canonical))
       val row = Rules.summarize(t).head()

@@ -99,7 +99,7 @@ object ExtractQueries {
     // exercised). The oracle re-derives the same rows relationally.
     "extract_json_canonical" -> ((s, dir) => {
       val path = JsonMrfFixture.writeFixture(s, dir)
-      val out = graft.extract.JsonExtractor.extractFile(
+      val (out, _) = graft.extract.JsonExtractor.extractFile(
         s, path, JsonMrfFixture.HospitalName, JsonMrfFixture.Zip)
       out.select(ChargesFixture.fabricated.map { case (u, _) =>
         col(ChargesFixture.toCanonical(u)).as(u) }: _*)

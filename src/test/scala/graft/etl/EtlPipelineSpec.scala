@@ -83,6 +83,26 @@ class EtlPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("not found in hospital registry"))
   }
 
+  test("a campus run that fails after caching releases its cached frames") {
+    val base = Files.createTempDirectory("graft-etl-fail").toString
+    val system = "acme_health"
+    Files.createDirectories(Paths.get(s"$base/data/raw data/$system"))
+    Files.writeString(Paths.get(s"$base/data/raw data/$system/c1.csv"), tallCsv)
+    val registryPath = s"$base/registry"
+    Seq(("c1", "Acme Health", "General Hospital", "30303", "c1.csv", "tall csv"))
+      .toDF("campus_id", "healthcare_system", "hospital_name", "zip_code",
+        "raw_filename", "structure").write.parquet(registryPath)
+    // The lake write comes after both frames are cached and materialized;
+    // a regular file at the lake path makes it throw.
+    val lake = Files.writeString(Paths.get(s"$base/lake"), "not a directory")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception] {
+      EtlPipeline.run(spark, registryPath, "c1", base, "t",
+        lakePath = Some(lake.toString))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
   private val wideCsv =
     """hospital_name,last_updated_on,version,hospital_location,hospital_address
       |General,2024-07-01,2.0.0,Atlanta,1 Main St

@@ -112,7 +112,8 @@ class ExtractorSpec extends SparkSpec {
 
   test("json extract: 3-level explode, type normalization, payer split, numeric→string") {
     val p = write("mrf.json", jsonMrf)
-    val out = JsonExtractor.extractFile(spark, p, "General", "30303").cache()
+    val (frame, meta) = JsonExtractor.extractFile(spark, p, "General", "30303")
+    val out = frame.cache()
     assert(out.columns.toSeq == graft.core.Schemas.CanonicalColumns)
     // 2 valid codes × (1 charge × 2 payers + 1 payerless charge) = 6 rows
     // (FOO rejected; payerless charges keep their gross/cash with "" payer).
@@ -125,7 +126,6 @@ class ExtractorSpec extends SparkSpec {
     val payerless = out.filter(col("insurance payer name") === "" &&
       col("code") === "470").head()
     assert(payerless.getAs[String]("gross charge") == "260.0")
-    val meta = JsonExtractor.metadata(JsonExtractor.readMrf(spark, p))
     assert(meta("version") == "2.0.0" && meta("hospital_name") == "General")
   }
 
@@ -160,22 +160,21 @@ class ExtractorSpec extends SparkSpec {
   test("MRF whole-file and streamed-split regimes extract identical rows and metadata") {
     // the two-regime extractFile (r15: the 8g/100× screen caught the
     // one-row whole-document materialization) must be a pure plan
-    // switch: same canonical rows, same metadata, from either path
-    val p = graft.queries.JsonMrfFixture.writeFixture(spark, sf("sf0.001"))
-    val whole = JsonExtractor.extract(JsonExtractor.readMrf(spark, p), "H", "Z")
-      .collect().map(_.toString).sorted.toSeq
-    val splitDir = java.nio.file.Files.createTempDirectory("graft-split-test")
-    val meta = JsonExtractor.splitMrf(p, splitDir.toString)
-    val rows = spark.read.schema(JsonExtractor.sciSchema)
-      .json(splitDir.resolve("sci.jsonl").toString)
-    val split = JsonExtractor.extractFromSci(
-      rows.select(org.apache.spark.sql.functions.struct(
-        col("description"), col("drug_information"),
-        col("code_information"), col("standard_charges")).as("sci")),
-      "H", "Z").collect().map(_.toString).sorted.toSeq
-    assert(whole.nonEmpty && whole == split)
-    val wholeMeta = JsonExtractor.metadata(JsonExtractor.readMrf(spark, p))
-    assert(wholeMeta.forall { case (k, v) => meta.getOrElse(k, "") == v })
+    // switch: same canonical rows, same metadata, from either path —
+    // also for a JSON null scalar, which the whole-file read gives as ""
+    val fixture = graft.queries.JsonMrfFixture.writeFixture(spark, sf("sf0.001"))
+    val nullVersion = write("mrf-null-version.json",
+      jsonMrf.replace("\"version\": \"2.0.0\"", "\"version\": null"))
+    for (p <- Seq(fixture, nullVersion)) {
+      val (whole, wholeMeta) = JsonExtractor.extractWholeFile(spark, p, "H", "Z")
+      val (split, splitMeta) = JsonExtractor.extractStreamed(spark, p, "H", "Z")
+      val wholeRows = whole.collect().map(_.toString).sorted.toSeq
+      assert(wholeRows.nonEmpty &&
+        wholeRows == split.collect().map(_.toString).sorted.toSeq)
+      assert(wholeMeta.keySet == JsonExtractor.MetadataKeys.toSet)
+      assert(splitMeta == wholeMeta)
+    }
+    assert(JsonExtractor.extractStreamed(spark, nullVersion, "H", "Z")._2("version") == "")
   }
 
   test("PERMISSIVE malformed ingest: quarantine classes, counts, and parsed-field retention") {
