@@ -118,9 +118,24 @@ object Cleaning {
     * disappears. */
   def dedup(df: DataFrame): DataFrame = df.dropDuplicates()
 
+  /** Column [[dedupCounted]] adds: how many input rows each output row stands for. */
+  val Multiplicity = "__mult"
+
+  /** [[dedup]] as a group-by over every column that keeps each distinct
+    * row's multiplicity in [[Multiplicity]], so one aggregation over its
+    * output (see [[dedupCounts]]) yields the pre- and post-dedup row counts
+    * next to whatever else it computes — no count job per statistic. */
+  def dedupCounted(df: DataFrame): DataFrame =
+    df.groupBy(df.columns.map(col): _*).agg(count(lit(1)).as(Multiplicity))
+
+  /** Aggregates over a [[dedupCounted]] frame: `pre_dedup_rows` (rows
+    * before dedup) and `deduped_rows` (rows after). */
+  def dedupCounts: Seq[Column] = Seq(
+    coalesce(sum(col(Multiplicity)), lit(0L)).as("pre_dedup_rows"),
+    count(lit(1)).as("deduped_rows"))
+
   /** Everything before dedup, in reference order — callers that need the
-    * duplicates-dropped delta (A11/devlog) count this frame vs the deduped
-    * one. */
+    * duplicates-dropped delta (A11/devlog) dedup it with [[dedupCounted]]. */
   def cleanAllPreDedup(raw: DataFrame): DataFrame = {
     val steps: Seq[DataFrame => DataFrame] = Seq(
       canonHeaders, ensureModifiers, cleanPriceFields, removeInvalidTokens,

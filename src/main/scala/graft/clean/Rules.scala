@@ -1,6 +1,6 @@
 package graft.clean
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.Conf.RuleNames
@@ -89,18 +89,43 @@ object Rules {
   /** [[summarize]] with caller-supplied extra aggregates computed in the
     * SAME pass (e.g. the devlog's pre-/post-dedup row counts) — one job
     * instead of one per statistic. */
-  def summarize(tagged: DataFrame, extraAggs: Seq[org.apache.spark.sql.Column]): DataFrame = {
+  def summarize(tagged: DataFrame, extraAggs: Seq[Column]): DataFrame = {
+    val aggs = summaryAggs(extraAggs)
+    withScore(tagged.agg(aggs.head, aggs.tail: _*))
+  }
+
+  /** [[summarize]] as an observation on an action the caller runs anyway:
+    * returns `tagged` with the summary aggregates attached (an action over
+    * it, or over a filter of it, sees every row) and a function that, once
+    * that action has run, gives the row [[summarize]] would — without a job
+    * of its own. */
+  def observeSummary(tagged: DataFrame,
+      extraAggs: Seq[Column]): (DataFrame, () => Row) = {
+    val aggs = summaryAggs(extraAggs)
+    val observation = Observation()
+    val schema = tagged.agg(aggs.head, aggs.tail: _*).schema // analysis only
+    (tagged.observe(observation, aggs.head, aggs.tail: _*), () => {
+      val metrics = observation.get
+      val local = tagged.sparkSession.createDataFrame(
+        java.util.List.of(Row.fromSeq(schema.fieldNames.toSeq.map(metrics))), schema)
+      withScore(local).head() // a local relation: evaluated on the driver
+    })
+  }
+
+  private def summaryAggs(extraAggs: Seq[Column]): Seq[Column] = {
     val isClean = col("rules_violated").isNull
     // coalesce(…, 0): sum over an EMPTY frame is NULL, which would unbox to
     // garbage zeros downstream while skipping the examined==0 score guard.
     val ruleCounts = predicates.map { case (name, p) =>
       coalesce(sum(when(coalesce(p, lit(false)), 1L).otherwise(0L)), lit(0L)).as(name)
     }
-    val aggs = ruleCounts ++ Seq(
+    ruleCounts ++ Seq(
       coalesce(sum(when(isClean, 1L).otherwise(0L)), lit(0L)).as("total_rows_cleaned"),
       coalesce(sum(when(isClean && col("negotiated_algorithm_invalid") === true, 1L)
         .otherwise(0L)), lit(0L)).as("total_algorithm_format_violations")) ++ extraAggs
-    val g = tagged.agg(aggs.head, aggs.tail: _*)
+  }
+
+  private def withScore(g: DataFrame): DataFrame = {
     val dropped = RuleNames.map(col).reduce(_ + _)
     val examined = col("total_rows_cleaned") + col("total_rows_dropped_due_to_rule_violations")
     g.withColumn("total_rows_dropped_due_to_rule_violations", dropped)

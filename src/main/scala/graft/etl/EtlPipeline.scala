@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.clean.{Cleaning, Rules}
@@ -23,6 +23,16 @@ import graft.meta.Devlog
   * mirrors the reference: `data/raw data|extracted data|cleaned data|logs/
   * {system}/...` keyed by the system slug (F15) — which doubles as the
   * partition key a 1000-hospital run would parallelize over.
+  *
+  * One-pass accounting: each phase materializes once, and every number the
+  * run returns comes out of a job that already runs. The extracted row
+  * count is observed on the extract CSV write; the rule summary, with the
+  * pre-dedup, deduped, clean and violation counts over the
+  * multiplicity-carrying dedup, is observed on the clean CSV write; the
+  * registry is collected once at the lookup and rewritten from that
+  * snapshot plus the in-hand devlog entry; the MRF metadata is read on the
+  * driver. No count, read-back or collect job exists only to compute a
+  * number.
   */
 object EtlPipeline {
 
@@ -41,11 +51,14 @@ object EtlPipeline {
       formatOverride: Option[String] = None,
       lakePath: Option[String] = None): RunResult = {
 
-    // S1/P1 — registry scan + key lookup; error when absent.
+    // S1/P1 — registry scan + key lookup; error when absent. Collected once:
+    // the lookup reads this snapshot and the S12 refresh rewrites it (the
+    // registry is a small dimension, and its own path is overwritten).
     val registry = spark.read.parquet(registryPath)
-    val rows = registry.filter(col("campus_id") === lit(campusId)).limit(1).collect()
-    require(rows.nonEmpty, s"Campus ID '$campusId' not found in hospital registry.")
-    val rec = rows.head
+    val registryRows = registry.collect()
+    val rec = registryRows.find(r => r.getAs[Any]("campus_id") == campusId).getOrElse(
+      throw new IllegalArgumentException(
+        s"Campus ID '$campusId' not found in hospital registry."))
     def field(n: String): String =
       Option(rec.getAs[Any](n)).map(_.toString).getOrElse("")
     val system = field("healthcare_system").toLowerCase.replace(" ", "_") // F15
@@ -54,40 +67,52 @@ object EtlPipeline {
     val hospitalName = field("hospital_name")
     val zipCode = field("zip_code")
     val rawPath = s"$baseDir/data/raw data/$system/${field("raw_filename")}"
-
-    // EXTRACT — dispatch to the structure's extractor; capture the MRF's own
-    // metadata (version/last_updated_on/address come from the FILE, not the
-    // registry — tall_format_csv_extractor.py:66-71, ETL_pipeline.py:92-99).
-    val (canonical: DataFrame, mrfMeta: Map[String, String]) = structure match {
-      case "tall csv" =>
-        (TallExtractor.extractFile(spark, rawPath, hospitalName, zipCode),
-          MrfCsv.readMetadata(spark, rawPath))
-      case "wide csv" =>
-        (WideExtractor.extractFile(spark, rawPath, hospitalName, zipCode),
-          MrfCsv.readMetadata(spark, rawPath))
-      case "json" =>
-        JsonExtractor.extractFile(spark, rawPath, hospitalName, zipCode)
-    }
     val extractedPath = s"$baseDir/data/extracted data/$system/${campusId}_extracted"
-    canonical.write.mode(SaveMode.Overwrite)
-      .option("header", "true").csv(extractedPath) // S8/S9 (standard quoting)
+    // A huge JSON MRF is split here before extraction; removed with the run.
+    val splitScratch = s"$baseDir/data/scratch/$system/${campusId}_mrf_split"
 
-    // CLEAN — read back all-string (S3 semantics), full pass + rules.
-    val extracted = spark.read.option("header", "true")
-      .schema(Schemas.canonicalIngest).csv(extractedPath)
-    val extractedRows = extracted.count()
-    // Fail loud on an empty extract (corrupt MRF, all code types rejected):
-    // the reference would crash in its parser; a silent 'cleaned' registry
-    // flip on garbage input is worse than an error.
-    require(extractedRows > 0,
-      s"Extraction produced 0 canonical rows for campus '$campusId' from $rawPath")
-    // Both caches are released however the run ends: a long-lived fleet
-    // driver must not keep a failed campus's frames pinned.
-    val preDedup = Cleaning.cleanAllPreDedup(extracted).cache()
-    val tagged = Rules.tagViolations(Cleaning.dedup(preDedup)).cache()
+    // The cached frame and the split scratch are released however the run
+    // ends: a long-lived fleet driver must not keep a failed campus's frame
+    // pinned or its scratch on disk.
+    var tagged: Option[DataFrame] = None
     try {
-      val preDedupRows = preDedup.count()
-      val (clean, violations) = Rules.split(tagged)
+      // EXTRACT — dispatch to the structure's extractor; capture the MRF's
+      // own metadata (version/last_updated_on/address come from the FILE,
+      // not the registry — tall_format_csv_extractor.py:66-71,
+      // ETL_pipeline.py:92-99). The row count is observed on the write.
+      val (canonical: DataFrame, mrfMeta: Map[String, String]) = structure match {
+        case "tall csv" =>
+          (TallExtractor.extractFile(spark, rawPath, hospitalName, zipCode),
+            MrfCsv.readMetadata(spark, rawPath))
+        case "wide csv" =>
+          (WideExtractor.extractFile(spark, rawPath, hospitalName, zipCode),
+            MrfCsv.readMetadata(spark, rawPath))
+        case "json" =>
+          JsonExtractor.extractFile(spark, rawPath, hospitalName, zipCode, splitScratch)
+      }
+      val extractCount = Observation()
+      canonical.observe(extractCount, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.Overwrite)
+        .option("header", "true").csv(extractedPath) // S8/S9 (standard quoting)
+      val extractedRows = extractCount.get("rows").asInstanceOf[Long]
+      // Fail loud on an empty extract (corrupt MRF, all code types rejected):
+      // the reference would crash in its parser; a silent 'cleaned' registry
+      // flip on garbage input is worse than an error.
+      require(extractedRows > 0,
+        s"Extraction produced 0 canonical rows for campus '$campusId' from $rawPath")
+
+      // CLEAN — read back all-string (S3 semantics), full pass + rules. The
+      // dedup keeps each row's multiplicity, so the rule summary also yields
+      // the pre- and post-dedup row counts; the summary is observed on the
+      // clean write, below the split's filter, so it sees every tagged row.
+      val extracted = spark.read.option("header", "true")
+        .schema(Schemas.canonicalIngest).csv(extractedPath)
+      val t = Rules.tagViolations(
+        Cleaning.dedupCounted(Cleaning.cleanAllPreDedup(extracted))).cache()
+      tagged = Some(t)
+      val (observed, summaryRow) = Rules.observeSummary(t, Cleaning.dedupCounts)
+      val clean = Rules.split(observed.drop(Cleaning.Multiplicity))._1
+      val violations = Rules.split(t.drop(Cleaning.Multiplicity))._2
 
       val cleanedPath = s"$baseDir/data/cleaned data/$system/${campusId}_cleaned"
       val quarantinePath = s"$baseDir/data/logs/rules violations/$system/${campusId}_rules_violated"
@@ -103,45 +128,49 @@ object EtlPipeline {
       violations.write.mode(SaveMode.Overwrite)
         .option("header", "true").csv(quarantinePath) // S10
 
-      val summary = Rules.summarize(tagged)
-      val summaryRow = summary.head()
-      val cleanRows = summaryRow.getAs[Long]("total_rows_cleaned")
-      // Duplicates dropped = rows removed by dedup itself (violation rows are
-      // counted as distinct tagged rows, not per-rule, for this delta).
-      val violationRows = violations.count()
-      val dupsDropped = preDedupRows - (cleanRows + violationRows)
+      val summary = summaryRow()
+      val cleanRows = summary.getAs[Long]("total_rows_cleaned")
+      val dedupedRows = summary.getAs[Long]("deduped_rows")
+      // Every deduped row is clean or quarantined; duplicates dropped = rows
+      // removed by dedup itself (violation rows are counted as distinct
+      // tagged rows, not per-rule, for this delta).
+      val violationRows = dedupedRows - cleanRows
+      val dupsDropped = summary.getAs[Long]("pre_dedup_rows") - dedupedRows
 
-      // S11 — devlog append (seq = ms timestamp for L1 ordering). The 4dp
+      // S11 — devlog append (seq = ns timestamp for L1 ordering). The 4dp
       // devlog rounding (cleaning_utils.py:231) is what flows to the registry
       // and the run result.
       val meta = Devlog.metadataFromSummary(summary, dupsDropped)
-      val score = meta.final_transparency_score
       val devlogPath = s"$baseDir/data/logs/devlogs/$system/${campusId}_devlog"
-      Devlog.append(spark, devlogPath, Devlog.DevlogEntry(
+      val entry = Devlog.DevlogEntry(
         campusId,
         mrfMeta.getOrElse("hospital_address", field("hospital_address")),
         mrfMeta.getOrElse("version", ""),
         mrfMeta.getOrElse("last_updated_on", ""),
         meta.final_transparency_score,
-        devlogSeq(), meta))
+        devlogSeq(), meta)
+      Devlog.append(spark, devlogPath, entry)
 
-      // S12/J4 — registry refresh (collect-then-rewrite: the registry is a
-      // small dimension and the source path is being overwritten).
-      val updated = Devlog.updateRegistry(registry, Devlog.latest(spark, devlogPath),
-        campusId, processedBy, Devlog.nowString(spark))
-      val frozen = spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(updated.collect(): _*)),
-        updated.schema)
-      frozen.write.mode(SaveMode.Overwrite).parquet(registryPath)
+      // S12/J4 — registry refresh from the collected snapshot and the entry
+      // just appended (the reference's devlog.iloc[-1], ETL_pipeline.py:90):
+      // both are local relations, so only the overwrite-write runs a job.
+      Devlog.updateRegistry(
+        spark.createDataFrame(java.util.Arrays.asList(registryRows: _*), registry.schema),
+        Devlog.entryFrame(spark, entry), campusId, processedBy, Devlog.nowString(spark))
+        .write.mode(SaveMode.Overwrite).parquet(registryPath)
 
       // A11 — output size bookkeeping via Hadoop FS.
       val fs = new Path(cleanedPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val outputMb = fs.getContentSummary(new Path(cleanedPath)).getLength / 1024.0 / 1024.0
 
       RunResult(campusId, system, structure, extractedRows, cleanRows,
-        violationRows, dupsDropped, score, extractedPath, cleanedPath,
-        quarantinePath, outputMb)
-    } finally { preDedup.unpersist(); tagged.unpersist() }
+        violationRows, dupsDropped, meta.final_transparency_score, extractedPath,
+        cleanedPath, quarantinePath, outputMb)
+    } finally {
+      tagged.foreach(_.unpersist())
+      val scratch = new Path(splitScratch)
+      scratch.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(scratch, true)
+    }
   }
 
   /** Devlog ordering value: nanoseconds since epoch (millis would tie for

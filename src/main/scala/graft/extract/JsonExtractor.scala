@@ -1,5 +1,7 @@
 package graft.extract
 
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -92,15 +94,34 @@ object JsonExtractor {
     * (driver here; inside a mapPartitions over file paths on a real
     * cluster — one hospital file per task). */
   def splitMrf(path: String, outDir: String): Map[String, String] = {
-    import com.fasterxml.jackson.core.JsonToken
-    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-    val mapper = new ObjectMapper()
-    val parser = mapper.getFactory.createParser(new java.io.File(path))
-    val meta = scala.collection.mutable.Map.empty[String, String]
     val dir = new java.io.File(outDir)
     dir.mkdirs()
     val out = new java.io.BufferedWriter(new java.io.FileWriter(
       new java.io.File(dir, "sci.jsonl")), 1 << 20)
+    try scanTopLevel(path) { (parser, mapper) =>
+      while (parser.nextToken() != JsonToken.END_ARRAY) {
+        out.write(mapper.readTree[JsonNode](parser).toString); out.newLine()
+      }
+    } finally out.close()
+  }
+
+  /** The devlog metadata ([[MetadataKeys]], "" when absent or null) by one
+    * Jackson pass on the driver that skips the charge array: the same
+    * values [[splitMrf]] returns, without a Spark job. */
+  def fileMetadata(path: String): Map[String, String] =
+    metadataKeys(scanTopLevel(path)((parser, _) => parser.skipChildren()))
+
+  private def metadataKeys(all: Map[String, String]): Map[String, String] =
+    MetadataKeys.map(k => k -> all.getOrElse(k, "")).toMap
+
+  /** Walks the MRF's top-level object: `onCharges` consumes the
+    * standard_charge_information array (the parser at its START_ARRAY);
+    * every other top-level scalar is returned, JSON null as "". */
+  private def scanTopLevel(path: String)(
+      onCharges: (JsonParser, ObjectMapper) => Unit): Map[String, String] = {
+    val mapper = new ObjectMapper()
+    val parser = mapper.getFactory.createParser(new java.io.File(path))
+    val meta = scala.collection.mutable.Map.empty[String, String]
     try {
       require(parser.nextToken() == JsonToken.START_OBJECT,
         s"MRF root must be a JSON object: $path")
@@ -110,17 +131,14 @@ object JsonExtractor {
         if (field == "standard_charge_information") {
           require(parser.currentToken() == JsonToken.START_ARRAY,
             s"standard_charge_information must be an array: $path")
-          while (parser.nextToken() != JsonToken.END_ARRAY) {
-            val node: JsonNode = mapper.readTree(parser)
-            out.write(node.toString); out.newLine()
-          }
+          onCharges(parser, mapper)
         } else if (parser.currentToken() == JsonToken.VALUE_NULL) {
           meta(field) = ""
         } else if (parser.currentToken().isScalarValue) {
           meta(field) = parser.getText
         } else parser.skipChildren()
       }
-    } finally { out.close(); parser.close() }
+    } finally parser.close()
     meta.toMap
   }
 
@@ -183,52 +201,40 @@ object JsonExtractor {
   /** Two-regime file entry: canonical rows plus the devlog metadata
     * ([[MetadataKeys]], "" when absent or null). Files up to
     * [[WholeFileThresholdBytes]] take [[extractWholeFile]], larger ones
-    * [[extractStreamed]]; the two give identical rows and metadata,
-    * pinned by ExtractorSpec's regime-parity test and the unchanged
-    * extract_json_canonical oracle. */
+    * [[extractStreamed]] with its split under `scratchDir`; the two give
+    * identical rows and metadata, pinned by ExtractorSpec's regime-parity
+    * test and the unchanged extract_json_canonical oracle. */
   def extractFile(spark: SparkSession, path: String, hospitalName: String,
-      zipCode: String): (DataFrame, Map[String, String]) =
+      zipCode: String, scratchDir: String): (DataFrame, Map[String, String]) =
     if (new java.io.File(path).length() <= WholeFileThresholdBytes)
       extractWholeFile(spark, path, hospitalName, zipCode)
-    else extractStreamed(spark, path, hospitalName, zipCode)
+    else extractStreamed(spark, path, hospitalName, zipCode, scratchDir)
 
   /** Whole-file multiLine parse: one row, cheapest, byte-compatible with
-    * the reference contract. */
+    * the reference contract; the metadata comes from [[fileMetadata]]. */
   def extractWholeFile(spark: SparkSession, path: String,
-      hospitalName: String, zipCode: String): (DataFrame, Map[String, String]) = {
-    val mrf = readMrf(spark, path)
-    (extract(mrf, hospitalName, zipCode), metadata(mrf))
-  }
+      hospitalName: String, zipCode: String): (DataFrame, Map[String, String]) =
+    (extract(readMrf(spark, path), hospitalName, zipCode), fileMetadata(path))
 
   /** Streamed split: bounded rows, parallel parse — the only shape that
     * survives a multi-GB hospital document on a fixed executor heap.
-    * The split scratch is keyed by (name, length, mtime) so a rewritten
-    * file re-splits; the metadata file is written last and marks the
-    * split complete. */
-  def extractStreamed(spark: SparkSession, path: String,
-      hospitalName: String, zipCode: String): (DataFrame, Map[String, String]) = {
-    import scala.jdk.CollectionConverters._
-    val f = new java.io.File(path)
-    val scratch = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-mrf-split-${f.getName}-${f.length()}-${f.lastModified()}")
-    val metaFile = new java.io.File(scratch, "_meta.json")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    if (!metaFile.exists()) {
-      val all = splitMrf(path, scratch.getAbsolutePath)
-      mapper.writeValue(metaFile,
-        MetadataKeys.map(k => k -> all.getOrElse(k, "")).toMap.asJava)
-    }
-    val meta = mapper.readValue(metaFile, classOf[java.util.Map[String, String]])
-      .asScala.toMap
+    * The split is written under `scratchDir`, which the caller owns: the
+    * returned frame reads it lazily, so the caller removes it once the
+    * frame's last action has run. */
+  def extractStreamed(spark: SparkSession, path: String, hospitalName: String,
+      zipCode: String, scratchDir: String): (DataFrame, Map[String, String]) = {
+    val meta = metadataKeys(splitMrf(path, scratchDir))
     val rows = spark.read.schema(sciSchema)
-      .json(new java.io.File(scratch, "sci.jsonl").getAbsolutePath)
+      .json(new java.io.File(scratchDir, "sci.jsonl").getAbsolutePath)
     (extractFromSci(rows.select(struct(
         col("description"), col("drug_information"),
         col("code_information"), col("standard_charges")).as("sci")),
       hospitalName, zipCode), meta)
   }
 
-  /** Devlog metadata from the MRF top level ([[MetadataKeys]]). */
+  /** Devlog metadata from a loaded MRF frame ([[MetadataKeys]]) — a Spark
+    * job over the whole document; [[fileMetadata]] reads the same values
+    * on the driver. */
   def metadata(mrf: DataFrame): Map[String, String] = {
     val rows = mrf.select(MetadataKeys.map(col): _*).take(1)
     require(rows.nonEmpty, "JSON MRF parsed to zero rows (empty or malformed file)")

@@ -54,11 +54,17 @@ object Devlog {
       rule_violations_summary = RuleNames.map(n => n -> r.getAs[Long](n)).toMap)
   }
 
-  /** S11 — append one devlog entry (JSON lines dataset). */
-  def append(spark: SparkSession, path: String, entry: DevlogEntry): Unit = {
+  /** One entry as a one-row frame — the local relation [[append]] writes
+    * and the `latestDevlog` argument of [[updateRegistry]] for a caller
+    * that holds the entry it just appended. */
+  def entryFrame(spark: SparkSession, entry: DevlogEntry): DataFrame = {
     import spark.implicits._
-    Seq(entry).toDS().write.mode("append").json(path)
+    Seq(entry).toDS().toDF()
   }
+
+  /** S11 — append one devlog entry (JSON lines dataset). */
+  def append(spark: SparkSession, path: String, entry: DevlogEntry): Unit =
+    entryFrame(spark, entry).write.mode("append").json(path)
 
   /** S13 + L1 — latest entry by explicit sequence (devlog.iloc[-1] needs an
     * ordering column in a distributed store). */
@@ -95,9 +101,13 @@ object Devlog {
       .withColumn("last_processed_on", when(matched, lit(nowString)).otherwise(col("last_processed_on")))
   }
 
-  /** F14 — the reference's timestamp format (ETL_pipeline.py:101). Injected
+  /** F14 — the reference's timestamp format (ETL_pipeline.py:101), in the
+    * session time zone, formatted on the driver (no Spark job). Injected
     * as a parameter everywhere else so plans stay deterministic. */
-  def nowString(spark: SparkSession): String =
-    spark.range(1).select(
-      date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss")).head().getString(0)
+  def nowString(spark: SparkSession): String = {
+    val zone = org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+      spark.conf.get("spark.sql.session.timeZone"))
+    java.time.ZonedDateTime.now(zone)
+      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+  }
 }

@@ -59,18 +59,13 @@ object CleanQueries {
       // roundtrip; the full-size clean pipeline is already gated by
       // clean_rows/clean_summary/clean_violations.
       val pre = Cleaning.cleanAllPreDedup(ChargesFixture.chargesSlice(s, dir, DevlogSliceMod))
-      // Dedup as a group-by-all-columns carrying the duplicate multiplicity,
-      // so the summary, the pre-dedup row count, and the deduped row count
-      // all come out of ONE aggregation pass (not three pipeline scans).
-      val grouped = pre.groupBy(pre.columns.map(col): _*)
-        .agg(count(lit(1)).as("__mult"))
-      val t = Rules.tagViolations(grouped)
-      val summary = Rules.summarize(t, Seq(
-        coalesce(sum(col("__mult")), lit(0L)).as("__pre_n"),
-        count(lit(1)).as("__ded_n")))
-      val row = summary.head()
-      val meta = Devlog.metadataFromSummary(row,
-        duplicatesDropped = row.getAs[Long]("__pre_n") - row.getAs[Long]("__ded_n"))
+      // Dedup carrying the duplicate multiplicity, so the summary, the
+      // pre-dedup row count, and the deduped row count all come out of ONE
+      // aggregation pass (not three pipeline scans) — as in EtlPipeline.run.
+      val t = Rules.tagViolations(Cleaning.dedupCounted(pre))
+      val row = Rules.summarize(t, Cleaning.dedupCounts).head()
+      val meta = Devlog.metadataFromSummary(row, duplicatesDropped =
+        row.getAs[Long]("pre_dedup_rows") - row.getAs[Long]("deduped_rows"))
       val scratch = java.nio.file.Files.createTempDirectory("graft-devlog-gate")
       val path = scratch.toString
       Devlog.append(s, path, Devlog.DevlogEntry("GATE", "1 Gate St", "v0",
@@ -142,10 +137,7 @@ object CleanQueries {
     // fixture, ending in the updated registry).
     "etl_flagship_trace" -> ((s, dir) => {
       import graft.meta.Devlog
-      val path = JsonMrfFixture.writeFixture(s, dir)
-      val (canonical, _) = graft.extract.JsonExtractor.extractFile(
-        s, path, JsonMrfFixture.HospitalName, JsonMrfFixture.Zip)
-      val t = Rules.tagViolations(Cleaning.cleanAll(canonical))
+      val t = Rules.tagViolations(Cleaning.cleanAll(JsonMrfFixture.extractCanonical(s, dir)))
       val row = Rules.summarize(t).head()
       // duplicatesDropped rides the devlog only — it does not reach the
       // registry columns this gate emits, so 0L keeps the plan one-pass
@@ -153,8 +145,7 @@ object CleanQueries {
       val meta = Devlog.metadataFromSummary(row, duplicatesDropped = 0L)
       val entry = Devlog.DevlogEntry("C1", "Georgia", "v2.0", "2024-01-01",
         meta.final_transparency_score, seq = 1L, meta)
-      import s.implicits._
-      val latest = Seq(entry).toDS().toDF()
+      val latest = Devlog.entryFrame(s, entry)
       val registry = graft.core.Tables.table(s, dir, "region").select(
         concat(lit("C"), col("r_regionkey").cast("string")).as("campus_id"),
         lit("raw").as("etl_status"), lit("").as("processed_by"),

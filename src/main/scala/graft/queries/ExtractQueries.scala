@@ -97,13 +97,9 @@ object ExtractQueries {
     // 22 columns (empty-code skip, unknown-type reject, MS-DRG→DRG
     // normalization, payer bracket split, payerless explode_outer row all
     // exercised). The oracle re-derives the same rows relationally.
-    "extract_json_canonical" -> ((s, dir) => {
-      val path = JsonMrfFixture.writeFixture(s, dir)
-      val (out, _) = graft.extract.JsonExtractor.extractFile(
-        s, path, JsonMrfFixture.HospitalName, JsonMrfFixture.Zip)
-      out.select(ChargesFixture.fabricated.map { case (u, _) =>
-        col(ChargesFixture.toCanonical(u)).as(u) }: _*)
-    }),
+    "extract_json_canonical" -> ((s, dir) =>
+      JsonMrfFixture.extractCanonical(s, dir).select(ChargesFixture.fabricated.map {
+        case (u, _) => col(ChargesFixture.toCanonical(u)).as(u) }: _*)),
 
     // S5 — SchemaExplorer (key path, type) rows over the SAME fixture
     // file, schema INFERRED from the written JSON (not the extractor's

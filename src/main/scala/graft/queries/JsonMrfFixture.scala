@@ -160,6 +160,16 @@ object JsonMrfFixture {
       out.getAbsolutePath
     })
 
+  /** The fixture file's canonical rows through the two-regime
+    * `JsonExtractor.extractFile`. A streamed split (fixtures past the
+    * whole-file threshold) lives next to the fixture it splits, which is
+    * kept for every later gate of the same run, like the fixture itself. */
+  def extractCanonical(spark: SparkSession, sfDir: String): DataFrame = {
+    val path = writeFixture(spark, sfDir)
+    graft.extract.JsonExtractor.extractFile(spark, path, HospitalName, Zip,
+      new java.io.File(new java.io.File(path).getParentFile, "split").getPath)._1
+  }
+
   // ------------------------------------------------------ oracle side (SQL)
 
   private def norm(rawTypeExpr: String): String =

@@ -96,6 +96,13 @@ class RulesSpec extends SparkSpec {
     assert(s.getAs[Long]("total_rows_cleaned") == 1L)
     assert(s.getAs[Long]("total_rows_dropped_due_to_rule_violations") == 3L)
     assert(math.abs(s.getAs[Double]("final_transparency_score") - 0.925) < 1e-12)
+
+    // The same row observed on an action over the clean side of the split,
+    // with an extra aggregate riding along.
+    val extra = Seq(count(lit(1)).as("n"))
+    val (observed, observedRow) = Rules.observeSummary(tagged, extra)
+    assert(Rules.split(observed)._1.collect().length == 1)
+    assert(observedRow() == Rules.summarize(tagged, extra).head())
   }
 
   test("P10 split: violations carry tag, clean side drops bookkeeping columns") {

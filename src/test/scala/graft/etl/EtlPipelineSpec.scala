@@ -1,6 +1,8 @@
 package graft.etl
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.graft.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -49,22 +51,37 @@ class EtlPipelineSpec extends SparkSpec {
     assert(res.cleanRows == 2)
     assert(res.transparencyScore > 0.9 && res.transparencyScore < 1.0)
 
-    // Artifacts exist where the reference layout says they should.
-    assert(Files.list(Paths.get(res.cleanedPath)).count() > 0)
-    assert(Files.list(Paths.get(res.quarantinePath)).count() > 0)
+    // Artifacts exist where the reference layout says they should, with the
+    // rows and columns of the plain dropDuplicates → tag → split path.
+    val (refClean, refViolations) = graft.clean.Rules.split(graft.clean.Rules.tagViolations(
+      graft.clean.Cleaning.cleanAll(spark.read.option("header", "true")
+        .schema(graft.core.Schemas.canonicalIngest).csv(res.extractedPath))))
+    def rows(path: String) = spark.read.option("header", "true").csv(path)
+    for (((ref, path), i) <- Seq(refClean -> res.cleanedPath,
+        refViolations -> res.quarantinePath).zipWithIndex) {
+      val refPath = s"$base/reference-$i" // through the same CSV sink
+      ref.write.option("header", "true").csv(refPath)
+      assert(rows(path).columns.toSeq == ref.columns.toSeq)
+      assert(rows(path).collect().map(_.toString).sorted.toSeq ==
+        rows(refPath).collect().map(_.toString).sorted.toSeq)
+    }
 
     // Registry refreshed in place: version/last_updated_on from the MRF run,
     // status flipped, other campus untouched.
     val reg = spark.read.parquet(registryPath).cache()
-    val c1 = reg.filter(col("campus_id") === "c1").head()
-    assert(c1.getAs[String]("etl_status") == "cleaned")
-    assert(c1.getAs[Double]("transparency_score") == res.transparencyScore)
-    assert(c1.getAs[String]("processed_by") == "tester")
-    val c2 = reg.filter(col("campus_id") === "c2").head()
-    assert(c2.getAs[String]("etl_status") == "new")
+    try {
+      val c1 = reg.filter(col("campus_id") === "c1").head()
+      assert(c1.getAs[String]("etl_status") == "cleaned")
+      assert(c1.getAs[Double]("transparency_score") == res.transparencyScore)
+      assert(c1.getAs[String]("processed_by") == "tester")
+      assert(c1.getAs[String]("version") == "2.0.0")
+      assert(c1.getAs[String]("last_updated_on") == "2024-07-01")
+      val c2 = reg.filter(col("campus_id") === "c2").head()
+      assert(c2.getAs[String]("etl_status") == "new")
 
-    // P9 — system filter.
-    assert(EtlPipeline.systemRegistry(reg, "ACME HEALTH").count() == 1)
+      // P9 — system filter.
+      assert(EtlPipeline.systemRegistry(reg, "ACME HEALTH").count() == 1)
+    } finally reg.unpersist()
 
     // Lake landing: cleaned rows visible via the partition-pruned read.
     assert(graft.meta.Lake.readCampus(spark, lake, "acme_health", "c1")
@@ -81,6 +98,22 @@ class EtlPipelineSpec extends SparkSpec {
       EtlPipeline.run(spark, registryPath, "nope", base, "t")
     }
     assert(e.getMessage.contains("not found in hospital registry"))
+  }
+
+  test("an extract with no canonical rows fails loudly") {
+    val base = Files.createTempDirectory("graft-etl-empty").toString
+    Files.createDirectories(Paths.get(s"$base/data/raw data/s"))
+    // Only an unknown code type: every pair is rejected.
+    Files.writeString(Paths.get(s"$base/data/raw data/s/c1.csv"),
+      tallCsv.replace("CPT", "FOO").replace("MS-DRG", "FOO"))
+    val registryPath = s"$base/registry"
+    Seq(("c1", "s", "h", "z", "c1.csv", "tall csv"))
+      .toDF("campus_id", "healthcare_system", "hospital_name", "zip_code",
+        "raw_filename", "structure").write.parquet(registryPath)
+    val e = intercept[IllegalArgumentException] {
+      EtlPipeline.run(spark, registryPath, "c1", base, "t")
+    }
+    assert(e.getMessage.contains("0 canonical rows"))
   }
 
   test("a campus run that fails after caching releases its cached frames") {
@@ -123,6 +156,48 @@ class EtlPipelineSpec extends SparkSpec {
       |            { "payer_name": "Aetna", "plan_name": "PPO",
       |              "methodology": "fee schedule", "standard_charge_dollar": 90.0 } ] } ] } ] }
       |""".stripMargin
+
+  test("job budget: one campus run per structure, and a successful run caches nothing") {
+    val base = Files.createTempDirectory("graft-etl-jobs").toString
+    val system = "budget_sys"
+    Files.createDirectories(Paths.get(s"$base/data/raw data/$system"))
+    Files.writeString(Paths.get(s"$base/data/raw data/$system/t1.csv"), tallCsv)
+    Files.writeString(Paths.get(s"$base/data/raw data/$system/w1.csv"), wideCsv)
+    Files.writeString(Paths.get(s"$base/data/raw data/$system/j1.json"), jsonMrf)
+    val registryPath = s"$base/registry"
+    Seq(("t1", "t1.csv", "tall csv"), ("w1", "w1.csv", "wide csv"), ("j1", "j1.json", "json"))
+      .map { case (id, file, structure) => (id, "Budget Sys", "H", "30303", file,
+        structure, "", "", 0.0, "new", "", "", "1 Main St") }
+      .toDF("campus_id", "healthcare_system", "hospital_name", "zip_code",
+        "raw_filename", "structure", "last_updated_on", "version",
+        "transparency_score", "etl_status", "processed_by",
+        "last_processed_on", "hospital_address")
+      .write.parquet(registryPath)
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val cached = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    val counts = try Seq("tall csv" -> "t1", "wide csv" -> "w1", "json" -> "j1").map {
+      case (structure, id) =>
+        Bus.drain(sc)
+        jobs.set(0)
+        EtlPipeline.run(spark, registryPath, id, base, "t")
+        Bus.drain(sc)
+        structure -> jobs.get
+    }.toMap finally sc.removeSparkListener(listener)
+    // Per run: registry schema + collect (2); the CSV body's header line
+    // (1, CSV only); the extract write (1, its map stage too on wide); the
+    // clean write with the dedup map stage and the cache build (3), which
+    // also yields the rule summary; the quarantine write (1); devlog append
+    // and registry write (2). Nothing runs only to count.
+    assert(counts == Map("tall csv" -> 10, "wide csv" -> 11, "json" -> 9))
+    assert(sc.getPersistentRDDs.keySet == cached)
+    assert(!Files.exists(Paths.get(s"$base/data/scratch/$system/j1_mrf_split")))
+  }
 
   test("wide-csv and json structures dispatch end-to-end; runSystem batches a system") {
     val base = Files.createTempDirectory("graft-etl3").toString

@@ -22,7 +22,23 @@ class ExtractorSpec extends SparkSpec {
         |""".stripMargin)
     val m = MrfCsv.readMetadata(spark, p)
     assert(m("version") == "2.0.0")
+    assert(m("hospital_location") == "Atlanta, GA")
     assert(m("hospital_address") == "1 Main St, Atlanta, GA 30303")
+
+    // A quoted comma next to an escaped quote, read through a directory
+    // (its first file holds the metadata) and through a gzip codec.
+    val dir = Files.createTempDirectory("graft-meta-dir")
+    val quoted = "hospital_name,version,hospital_address\n" +
+      "\"St. Mary's, \"\"North\"\"\",3.1,\"9 Elm St, Macon\"\ndescription\nx\n"
+    Files.writeString(dir.resolve("a.csv"), quoted)
+    val gz = dir.resolveSibling(dir.getFileName.toString + ".csv.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try out.write(quoted.getBytes("UTF-8")) finally out.close()
+    for (path <- Seq(dir.toString, gz.toString)) {
+      val q = MrfCsv.readMetadata(spark, path)
+      assert(q == Map("hospital_name" -> "St. Mary's, \"North\"", "version" -> "3.1",
+        "hospital_address" -> "9 Elm St, Macon"))
+    }
   }
 
   private val tallCsv =
@@ -112,7 +128,8 @@ class ExtractorSpec extends SparkSpec {
 
   test("json extract: 3-level explode, type normalization, payer split, numeric→string") {
     val p = write("mrf.json", jsonMrf)
-    val (frame, meta) = JsonExtractor.extractFile(spark, p, "General", "30303")
+    val (frame, meta) = JsonExtractor.extractFile(spark, p, "General", "30303",
+      Files.createTempDirectory("graft-split").resolve("split").toString)
     val out = frame.cache()
     assert(out.columns.toSeq == graft.core.Schemas.CanonicalColumns)
     // 2 valid codes × (1 charge × 2 payers + 1 payerless charge) = 6 rows
@@ -162,19 +179,34 @@ class ExtractorSpec extends SparkSpec {
     // one-row whole-document materialization) must be a pure plan
     // switch: same canonical rows, same metadata, from either path —
     // also for a JSON null scalar, which the whole-file read gives as ""
+    // The split lives only in the caller's scratch directory, nothing is
+    // left under java.io.tmpdir, and the scratch is gone once removed.
     val fixture = graft.queries.JsonMrfFixture.writeFixture(spark, sf("sf0.001"))
     val nullVersion = write("mrf-null-version.json",
       jsonMrf.replace("\"version\": \"2.0.0\"", "\"version\": null"))
-    for (p <- Seq(fixture, nullVersion)) {
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def tmpSplits = tmp.list().filter(_.startsWith("graft-mrf-split-")).toSet
+    val splitsBefore = tmpSplits
+    val scratchRoot = Files.createTempDirectory("graft-split-scratch")
+    for ((p, i) <- Seq(fixture, nullVersion).zipWithIndex) {
+      val scratch = scratchRoot.resolve(s"split-$i")
       val (whole, wholeMeta) = JsonExtractor.extractWholeFile(spark, p, "H", "Z")
-      val (split, splitMeta) = JsonExtractor.extractStreamed(spark, p, "H", "Z")
+      val (split, splitMeta) =
+        JsonExtractor.extractStreamed(spark, p, "H", "Z", scratch.toString)
       val wholeRows = whole.collect().map(_.toString).sorted.toSeq
       assert(wholeRows.nonEmpty &&
         wholeRows == split.collect().map(_.toString).sorted.toSeq)
       assert(wholeMeta.keySet == JsonExtractor.MetadataKeys.toSet)
       assert(splitMeta == wholeMeta)
+      assert(JsonExtractor.metadata(JsonExtractor.readMrf(spark, p)) == wholeMeta)
+      if (p == nullVersion) assert(splitMeta("version") == "")
+      assert(Files.exists(scratch.resolve("sci.jsonl")))
     }
-    assert(JsonExtractor.extractStreamed(spark, nullVersion, "H", "Z")._2("version") == "")
+    assert(tmpSplits == splitsBefore)
+    val walked = Files.walk(scratchRoot)
+    try walked.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally walked.close()
+    assert(!Files.exists(scratchRoot))
   }
 
   test("PERMISSIVE malformed ingest: quarantine classes, counts, and parsed-field retention") {
