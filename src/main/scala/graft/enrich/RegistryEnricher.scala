@@ -7,14 +7,15 @@ import org.apache.spark.sql.functions._
   * (hospital_enricher.py:117-186) — exact campus_id lookup (J1) with a fuzzy
   * SequenceMatcher fallback at cutoff 0.9 (J2), top-1 per scraped row.
   *
-  * Scale shape: the exact stage is a broadcast hash join (CMS ≤ 50k rows by
-  * the reference's own fetch cap). The fuzzy stage generates candidates via
-  * an INVERTED-INDEX join on per-length-class signatures (deletion variants
-  * for the sharp classes, pigeonhole L*-grams otherwise — proofs at the
-  * stage-2 comments), then confirms with the exact ratio and takes top-1 per
-  * source row as a min(struct) aggregate over (ok desc, ratio desc, cms key
-  * asc), so the quadratic |misses|×|CMS| band cross product never
-  * materializes. difflib's get_close_matches breaks
+  * Scale shape: the deduplicated CMS side (≤ 50k rows by the reference's own
+  * fetch cap) is collected once and served as a local relation to every
+  * stage that reads it. The exact stage is a broadcast hash join. The fuzzy
+  * stage generates candidates via an INVERTED-INDEX join on per-length-class
+  * signatures (deletion variants for the sharp classes, pigeonhole L*-grams
+  * otherwise — proofs at the stage-2 comments), then confirms with the exact
+  * ratio and takes top-1 per DISTINCT MISS KEY as a min(struct) aggregate
+  * over (ratio desc, cms key asc), so the quadratic |misses|×|CMS| band
+  * cross product never materializes. difflib's get_close_matches breaks
   * score ties by candidate order; we use the CMS key as the deterministic
   * stand-in (documented divergence only when two candidates tie EXACTLY at
   * the best score).
@@ -33,39 +34,49 @@ object RegistryEnricher {
     * (null when unmatched) + `match_kind` (exact | fuzzy | none) +
     * `match_ratio` (1.0 exact, score for fuzzy, null none).
     *
-    * NOTE: the hit/miss branches both descend from the exact join, so one
-    * action scans the scraped side twice (the broadcast relation is reused).
-    * For a very large scraped side, `.cache()` it before calling. */
+    * Unlike a lazy query builder, this runs Spark work at call time: the
+    * deduplicated CMS side (one row per key) is collected to the driver
+    * once and re-served as a local relation to every stage that reads it.
+    * That is the table the exact stage broadcasts anyway, so driver memory
+    * is bounded as before — by the CMS side's size, ≤ 50k rows under the
+    * reference's fetch cap. Everything on the scraped side stays lazy, and
+    * nothing is persisted.
+    *
+    * NOTE: the hit and miss branches both descend from the exact join, and
+    * the misses feed both the signature index and the final re-attach, so
+    * one action scans the scraped side three times. For a very large scraped
+    * side, `.cache()` it before calling. */
   def enrich(scraped: DataFrame, cms: DataFrame,
       cutoff: Double = DefaultCutoff): DataFrame = {
     val cmsCols = EnrichedColumns.filter(cms.columns.contains)
     // Deterministic one-row-per-key CMS side: duplicate campus_id keys (real
     // after the lossy key normalization) must not fan scraped rows out. The
     // reference's dict-style index keeps one row; we keep the struct-min row
-    // (deterministic under any partitioning, unlike dropDuplicates).
-    val cmsSel = cms.select((col("campus_id").as("__cms_key") +:
-      cmsCols.map(col)): _*)
-      .groupBy(col("__cms_key"))
+    // (deterministic under any partitioning, unlike dropDuplicates). A null
+    // key can match nothing, so it is dropped before the collect.
+    val dedup = cms.filter(col("campus_id").isNotNull)
+      .groupBy(col("campus_id").as("__cms_key"))
       .agg(min(struct(cmsCols.map(col): _*)).as("__r"))
-      .select((col("__cms_key") +: cmsCols.map(c => col(s"__r.$c").as(c))): _*)
+      .select((col("__cms_key") +: length(col("__cms_key")).as("__lb") +:
+        cmsCols.map(c => col(s"__r.$c").as(c))): _*)
+    val cmsRows = dedup.collect()
+    val cmsSel = scraped.sparkSession.createDataFrame(
+      java.util.Arrays.asList(cmsRows: _*), dedup.schema)
+    val cmsAttrs = cmsSel.drop("__lb")
 
     // Stage 1 — exact broadcast hash join.
-    val exact = scraped.join(broadcast(cmsSel),
-      scraped("campus_id") === cmsSel("__cms_key"), "left")
+    val exact = scraped.join(broadcast(cmsAttrs),
+      scraped("campus_id") === cmsAttrs("__cms_key"), "left")
     val hit = exact.filter(col("__cms_key").isNotNull)
       .withColumn("match_kind", lit("exact"))
       .withColumn("match_ratio", lit(1.0))
-    // Misses inherit the (often single-partition) scan layout but fan out
-    // into |misses|×|CMS| ratio evaluations — spread them first.
-    // PERSISTED (not just shared): __srcid is monotonically_increasing_id,
-    // which is only stable within one materialization — the gram branch
-    // and the confirm join below both key on it, so an unpinned recompute
-    // could hand the two branches different ids and silently mispair.
-    val miss = graft.core.Memo.ownedPersist(
-      exact.filter(col("__cms_key").isNull)
-        .drop("__cms_key" +: cmsCols: _*)
-        .repartition(scraped.sparkSession.sparkContext.defaultParallelism)
-        .withColumn("__srcid", monotonically_increasing_id()))
+    // The fuzzy score and winner depend only on the key pair, so the index
+    // and the confirm run once per DISTINCT miss key; the winners are joined
+    // back onto the miss rows by key below.
+    val miss = exact.filter(col("__cms_key").isNull)
+      .drop("__cms_key" +: cmsCols: _*)
+    val missKeys = miss.select(col("campus_id").as("__mkey"))
+      .filter(col("__mkey").isNotNull).distinct()
 
     // Stage 2 — fuzzy fallback on misses only: INVERTED-INDEX candidate
     // join + exact confirm, replacing the length-banded cross product
@@ -150,79 +161,58 @@ object RegistryEnricher {
       greatest(floor(len * lit(cutoff) / (lit(2.0) - cutoff)).cast("int")
         - 1, lit(1)),
       ceil(len * (lit(2.0) - cutoff) / lit(cutoff)).cast("int") + 1)
-    val cmsSigs = cmsSel.select(col("__cms_key"))
-      .withColumn("__lb", length(col("__cms_key")))
+    val cmsSigs = cmsSel.select(col("__cms_key"), col("__lb"))
       .withColumn("__la", explode(bandOf(col("__lb"))))
       .select(col("__cms_key"), col("__la"), col("__lb"),
         explode(sigsOf(col("__cms_key"), col("__la"), col("__lb"),
           ownIsMissSide = false)).as("__sig"))
     // The miss side only emits classes whose lb actually EXISTS on the
-    // CMS side: the distinct CMS key lengths collapse to ONE array row
-    // (at most a few dozen values under the reference's 50k fetch cap)
-    // broadcast onto the misses, and pruning dead classes cuts the
+    // CMS side: the distinct CMS key lengths (at most a few dozen values
+    // under the reference's 50k fetch cap) are read off the collected rows
+    // and ride the plan as an array literal. Pruning dead classes cuts the
     // signature explode volume by the dead-band factor — at the 100×
-    // canary the CMS histogram is a single length, so this drops ~4/5
-    // of the exploded rows before the shuffle. A 1-row broadcast rather
-    // than a driver collect: enrich() stays build-lazy like every other
-    // query builder (no Spark job until the first action).
-    val cmsLenArr = cmsSel
-      .select(length(col("__cms_key")).as("l")).na.drop()
-      .agg(sort_array(collect_set(col("l"))).as("__cms_lens"))
-    val missSigs = miss.select(col("__srcid"), col("campus_id"))
-      .crossJoin(broadcast(cmsLenArr))
-      .withColumn("__la", length(col("campus_id")))
-      .withColumn("__lb", explode(array_intersect(bandOf(col("__la")),
-        col("__cms_lens"))))
-      .select(col("__srcid"), col("__la"), col("__lb"),
-        explode(sigsOf(col("campus_id"), col("__la"), col("__lb"),
+    // canary the CMS histogram is a single length, so this drops ~4/5 of
+    // the exploded rows before the shuffle.
+    val cmsLens = typedLit(cmsRows.map(_.getInt(1)).distinct.sorted.toSeq)
+    val missSigs = missKeys
+      .withColumn("__la", length(col("__mkey")))
+      .withColumn("__lb", explode(array_intersect(bandOf(col("__la")), cmsLens)))
+      .select(col("__mkey"), col("__la"), col("__lb"),
+        explode(sigsOf(col("__mkey"), col("__la"), col("__lb"),
           ownIsMissSide = true)).as("__sig"))
     // The candidate join is keyed (la, lb, signature) — the
     // inverted-index shape (Dedup's shingle joins): no broadcast forced,
     // so at the 50k production cap the exploded index shuffles instead
     // of blowing the driver. AQE broadcasts it when it is actually small.
     val candidates = missSigs.join(cmsSigs, Seq("__la", "__lb", "__sig"))
-      .select(col("__srcid"), col("__cms_key")).distinct()
-    // Exact confirm + attribute re-attach; LEFT join back onto the miss
-    // rows so zero-candidate misses still emit their 'none' row. Pairs
-    // the index pruned are all sub-cutoff: they could never outrank an
-    // __ok row in the window, and a miss whose candidates are ALL
-    // sub-cutoff emits the identical nulled 'none' row either way —
-    // output is bit-identical to the banded cross product's.
-    val scored = miss.join(
-        candidates.join(broadcast(cmsSel), Seq("__cms_key")),
-        Seq("__srcid"), "left")
-      .withColumn("__ratio",
-        when(col("__cms_key").isNotNull,
-          SequenceMatcherRatio.seqRatioAtLeast(
-            col("campus_id"), col("__cms_key"), cutoff)))
-      .withColumn("__ok", col("__ratio") >= cutoff)
-    // Top-1 per SOURCE ROW (__srcid, not the key: duplicate scraped keys
-    // each keep their own match row) as one min(struct) hash aggregate —
-    // the same ordering the ranking window expressed ((__ok desc,
-    // __ratio desc, __cms_key asc) ≡ lexicographic min of (!__ok,
-    // −__ratio, __cms_key)), but map-side combinable and with no
-    // per-partition sort. Zero-candidate rows are their own group, so
-    // the null key fields never compare against anything.
-    val payload = struct(
-      (scraped.columns.map(col) ++ cmsCols.map(col) :+
-        col("__ratio") :+ col("__ok")): _*)
-    val fuzzy = scored
-      .groupBy(col("__srcid"))
-      .agg(min(struct(
-        when(col("__ok"), 0).otherwise(1).as("k1"),
-        (-coalesce(col("__ratio"), lit(-1.0))).as("k2"),
-        col("__cms_key").as("k3"),
-        payload.as("p"))).as("m"))
-      .selectExpr("m.p.*")
-      .withColumn("match_kind", when(col("__ok"), lit("fuzzy")).otherwise(lit("none")))
-      .withColumn("match_ratio", when(col("__ok"), col("__ratio")))
-    val nulled = cmsCols.foldLeft(fuzzy)((d, c) =>
-      d.withColumn(c, when(col("__ok"), col(c))))
+      .select(col("__mkey"), col("__cms_key"))
+    // Exact confirm, then top-1 per miss KEY as one min(struct) aggregate
+    // over (−ratio, cms key): ratio desc, ties to the smallest key. A pair
+    // found through several signatures repeats, which min ignores. Pairs
+    // the index pruned are all sub-cutoff, and sub-cutoff candidates are
+    // dropped before the aggregate, so a key with no ≥cutoff candidate
+    // has no row here.
+    val best = candidates
+      .withColumn("__ratio", SequenceMatcherRatio.seqRatioAtLeast(
+        col("__mkey"), col("__cms_key"), cutoff))
+      .filter(col("__ratio") >= cutoff)
+      .groupBy(col("__mkey"))
+      .agg(min(struct((-col("__ratio")).as("k1"), col("__cms_key").as("k2")))
+        .as("m"))
+      .select(col("__mkey"), col("m.k2").as("__cms_key"),
+        (-col("m.k1")).as("match_ratio"))
+      .join(broadcast(cmsAttrs), Seq("__cms_key"))
+    // LEFT join by key back onto the miss rows: duplicate scraped rows each
+    // keep their own row, and a miss with no winner (including a null key)
+    // emits its 'none' row with nulled attributes and ratio.
+    val fuzzy = miss.join(best, col("campus_id") === col("__mkey"), "left")
+      .withColumn("match_kind",
+        when(col("__cms_key").isNotNull, lit("fuzzy")).otherwise(lit("none")))
 
     val outCols: Seq[Column] =
       (scraped.columns.map(col) ++ cmsCols.map(col) :+
         col("match_kind") :+ col("match_ratio")).toSeq
-    hit.select(outCols: _*).union(nulled.select(outCols: _*))
+    hit.select(outCols: _*).union(fuzzy.select(outCols: _*))
   }
 
   /** The registry's full 30-column projection with ""-fill for anything the

@@ -81,16 +81,16 @@ class RetryIdempotenceSpec extends SparkSpec {
     assert(got == clean)
   }
 
-  test("fuzzy-enrich __srcid confirm stage survives a task retry at the source scan") {
-    // RegistryEnricher's fuzzy branch stamps __srcid
-    // (monotonically_increasing_id, persisted) on the exact-join misses;
-    // the gram index and the confirm join both key on it. A retried task
-    // in the miss pipeline must re-derive identical ids or the confirm
-    // join silently mispairs rows.
+  test("per-key fuzzy confirm survives a task retry at the source scan") {
+    // RegistryEnricher's fuzzy branch takes the distinct exact-join miss
+    // keys through the signature index and the confirm, then joins each
+    // key's winner back onto the miss rows by key. A retried task in the
+    // scraped-side scan feeds both the key set and the miss rows; its
+    // recompute must give the same winners and the same rows.
     val base = graft.core.Tables.table(spark, sf("sf0.001"), "customer")
     // every scraped key misses exactly (trailing 'x') but stays within
     // ratio 0.8 of its registry original → the whole set takes the
-    // fuzzy inverted-index + __srcid confirm path
+    // fuzzy inverted-index + per-key confirm path
     val scraped = base.select(
       concat(col("c_name"), lit("x")).as("campus_id"),
       col("c_custkey").as("src_key"))

@@ -1,5 +1,8 @@
 package graft.enrich
 
+import java.nio.file.Files
+import org.apache.spark.graft.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 
@@ -30,31 +33,89 @@ class FuzzySpec extends SparkSpec {
     got.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
 
+  /** Scraped rows with an exact, a fuzzy and a no-match key, and a
+    * duplicated fuzzy key, against a three-row CMS table. */
+  private def scrapedFixture = Seq(
+    ("grady_memorial", "Grady"),        // exact
+    ("emory_mdtown", "Emory Mid"),      // fuzzy 0.96 vs emory_midtown
+    ("piedmont_atl", "Piedmont"),       // best 0.857 < 0.9 → none
+    ("emory_mdtown", "Emory Mid dup")   // duplicate key must survive
+  ).toDF("campus_id", "display_name")
+  private def cmsFixture = Seq(
+    ("grady_memorial", "4", "Acute", "Fulton", "404", "30303"),
+    ("emory_midtown", "5", "Acute", "Fulton", "404", "30308"),
+    ("piedmont_atlanta", "3", "Acute", "Fulton", "404", "30309"))
+    .toDF("campus_id", "cms_rating", "hospital_type", "county", "telephone_num", "cms_zip")
+
   test("enricher: exact hit, fuzzy >=0.9 hit, <0.9 unmatched; dup keys kept") {
+    val out = RegistryEnricher.enrich(scrapedFixture, cmsFixture).cache()
+    try {
+      assert(out.count() == 4)
+      val byRow = out.collect().map(r => (r.getAs[String]("campus_id"),
+        r.getAs[String]("display_name"), r.getAs[String]("match_kind"),
+        r.getAs[String]("cms_rating"))).toSet
+      assert(byRow == Set(
+        ("grady_memorial", "Grady", "exact", "4"),
+        ("emory_mdtown", "Emory Mid", "fuzzy", "5"),
+        ("emory_mdtown", "Emory Mid dup", "fuzzy", "5"),
+        ("piedmont_atl", "Piedmont", "none", null)))
+      val ratios = out.filter(col("match_kind") === "fuzzy")
+        .select(col("match_ratio")).collect().map(_.getDouble(0)).toSeq
+      assert(ratios.forall(_ == 0.96))
+    } finally out.unpersist(blocking = true)
+  }
+
+  test("enricher: duplicate CMS keys keep the struct-min row, ties go to the smallest key") {
     val scraped = Seq(
-      ("grady_memorial", "Grady"),        // exact
-      ("emory_mdtown", "Emory Mid"),      // fuzzy 0.96 vs emory_midtown
-      ("piedmont_atl", "Piedmont"),       // best 0.857 < 0.9 → none
-      ("emory_mdtown", "Emory Mid dup")   // duplicate key must survive
+      ("grady_memorial", "G1"),           // exact, against a duplicated key
+      ("grady_memorial", "G2"),           // duplicate scraped key
+      ("grady_memoral", "G3"),            // fuzzy 0.963 onto the duplicated key
+      ("emory_mdtown", "E1")              // fuzzy 0.96 tie: emory_mdtownx < emory_midtown
     ).toDF("campus_id", "display_name")
     val cms = Seq(
-      ("grady_memorial", "4", "Acute", "Fulton", "404", "30303"),
-      ("emory_midtown", "5", "Acute", "Fulton", "404", "30308"),
-      ("piedmont_atlanta", "3", "Acute", "Fulton", "404", "30309"))
+      ("grady_memorial", "4", "Acute", "Fulton", "404-1", "30303"),
+      ("grady_memorial", "3", "Acute", "Fulton", "404-2", "30303"),
+      ("emory_midtown", "5", "Acute", "Fulton", "404-3", "30308"),
+      ("emory_mdtownx", "2", "Acute", "Fulton", "404-4", "30308"))
       .toDF("campus_id", "cms_rating", "hospital_type", "county", "telephone_num", "cms_zip")
-    val out = RegistryEnricher.enrich(scraped, cms).cache()
-    assert(out.count() == 4)
-    val byRow = out.collect().map(r => (r.getAs[String]("campus_id"),
-      r.getAs[String]("display_name"), r.getAs[String]("match_kind"),
-      r.getAs[String]("cms_rating"))).toSet
-    assert(byRow == Set(
-      ("grady_memorial", "Grady", "exact", "4"),
-      ("emory_mdtown", "Emory Mid", "fuzzy", "5"),
-      ("emory_mdtown", "Emory Mid dup", "fuzzy", "5"),
-      ("piedmont_atl", "Piedmont", "none", null)))
-    val ratios = out.filter(col("match_kind") === "fuzzy")
-      .select(col("match_ratio")).collect().map(_.getDouble(0)).toSeq
-    assert(ratios.forall(_ == 0.96))
+    val got = RegistryEnricher.enrich(scraped, cms).collect()
+      .map(r => (r.getAs[String]("display_name"), r.getAs[String]("match_kind"),
+        r.getAs[String]("cms_rating"), r.getAs[String]("telephone_num"),
+        r.getAs[Double]("match_ratio")))
+      .toSeq.sortBy(_._1)
+    // one output row per scraped row: neither the duplicated CMS key nor
+    // the tied candidates fan a row out
+    assert(got == Seq(
+      ("E1", "fuzzy", "2", "404-4", 0.96),
+      ("G1", "exact", "3", "404-2", 1.0),
+      ("G2", "exact", "3", "404-2", 1.0),
+      ("G3", "fuzzy", "3", "404-2", SequenceMatcher.ratio("grady_memoral", "grady_memorial"))))
+  }
+
+  test("job budget: one registry build, and it persists nothing") {
+    val (scraped, cms) = (scrapedFixture, cmsFixture)
+    val out = Files.createTempDirectory("graft-registry-jobs").resolve("registry").toString
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val cached = sc.getPersistentRDDs.keySet
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      RegistryEnricher.toRegistryProjection(RegistryEnricher.enrich(scraped, cms))
+        .write.parquet(out)
+      Bus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    // At the enrich call, the CMS dedup's map stage and its collect (2).
+    // At the write: broadcasts of the local CMS side, with attributes and
+    // key-only (2), and of its signature index (1); the miss-key distinct
+    // and the miss rows' shuffle for the re-attach join (2); the write (1).
+    // Nothing is persisted, counted or read back.
+    assert(jobs.get == 8)
+    assert(sc.getPersistentRDDs.keySet == cached)
+    assert(spark.read.parquet(out).count() == 4)
   }
 
   // Structure-free insurance for the signature prefilter (deletion
@@ -89,25 +150,34 @@ class FuzzySpec extends SparkSpec {
       (1 to 40).map(i => s"${randKey(6 + rnd.nextInt(10))}x$i")
     val scraped = scrapedKeys.zipWithIndex
       .map { case (k, i) => (k, s"row$i") }.toDF("campus_id", "display_name")
-    val cms = cmsKeys.map(k => (k, "5", "Acute", "Cty", "404", "30303"))
+    // each CMS row carries its own key in an attribute column, so the
+    // check below sees WHICH row won, not only its ratio
+    val cms = cmsKeys.map(k => (k, "5", "Acute", "Cty", k, "30303"))
       .toDF("campus_id", "cms_rating", "hospital_type", "county",
         "telephone_num", "cms_zip")
-    val got = RegistryEnricher.enrich(scraped, cms, cutoff)
+    val rows = RegistryEnricher.enrich(scraped, cms, cutoff)
       .select(col("campus_id"), col("display_name"), col("match_kind"),
-        col("match_ratio"))
+        col("match_ratio"), col("telephone_num"))
       .collect()
+    assert(rows.length == scrapedKeys.size)
+    val got = rows
       .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getString(2), Option(r.get(3)).map(_.asInstanceOf[Double])))
+        (r.getString(2), Option(r.get(3)).map(_.asInstanceOf[Double]),
+          Option(r.getString(4))))
       .toMap
     val cmsSet = cmsKeys.toSet
     scrapedKeys.zipWithIndex.foreach { case (k, i) =>
-      val want: (String, Option[Double]) =
-        if (cmsSet.contains(k)) ("exact", Some(1.0))
+      // the winner: highest ratio, ties to the smallest CMS key
+      val want: (String, Option[Double], Option[String]) =
+        if (cmsSet.contains(k)) ("exact", Some(1.0), Some(k))
         else {
-          val best = cmsKeys.map(c => (SequenceMatcher.ratio(k, c), c))
+          val ok = cmsKeys.map(c => (SequenceMatcher.ratio(k, c), c))
             .filter(_._1 >= cutoff)
-          if (best.isEmpty) ("none", None)
-          else ("fuzzy", Some(best.max._1))
+          if (ok.isEmpty) ("none", None, None)
+          else {
+            val top = ok.map(_._1).max
+            ("fuzzy", Some(top), Some(ok.filter(_._1 == top).map(_._2).min))
+          }
         }
       assert(got((k, s"row$i")) == want,
         s"cutoff $cutoff key $k: got ${got((k, s"row$i"))}, want $want")
