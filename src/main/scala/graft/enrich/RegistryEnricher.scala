@@ -2,20 +2,21 @@ package graft.enrich
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Registry build: scraped hospitals enriched against the CMS provider table
   * (hospital_enricher.py:117-186) — exact campus_id lookup (J1) with a fuzzy
   * SequenceMatcher fallback at cutoff 0.9 (J2), top-1 per scraped row.
   *
   * Scale shape: the deduplicated CMS side (≤ 50k rows by the reference's own
-  * fetch cap) is collected once and served as a local relation to every
-  * stage that reads it. The exact stage is a broadcast hash join. The fuzzy
-  * stage generates candidates via an INVERTED-INDEX join on per-length-class
-  * signatures (deletion variants for the sharp classes, pigeonhole L*-grams
-  * otherwise — proofs at the stage-2 comments), then confirms with the exact
-  * ratio and takes top-1 per DISTINCT MISS KEY as a min(struct) aggregate
-  * over (ratio desc, cms key asc), so the quadratic |misses|×|CMS| band
-  * cross product never materializes. difflib's get_close_matches breaks
+  * fetch cap) is collected once and rides the plan inside one expression,
+  * `cms_match(campus_id)` ([[CmsMatch]]), which answers both stages per
+  * key: a hash lookup for J1, and for a miss an inverted-index candidate
+  * search over per-length-class signatures confirmed with the exact ratio
+  * (proofs at [[CmsIndex]]), memoized per distinct miss key. The scraped
+  * side is one narrow projection — no join, shuffle or broadcast — so the
+  * quadratic |misses|×|CMS| cross product never materializes and a build
+  * plans and compiles few operators. difflib's get_close_matches breaks
   * score ties by candidate order; we use the CMS key as the deterministic
   * stand-in (documented divergence only when two candidates tie EXACTLY at
   * the best score).
@@ -34,185 +35,28 @@ object RegistryEnricher {
     * (null when unmatched) + `match_kind` (exact | fuzzy | none) +
     * `match_ratio` (1.0 exact, score for fuzzy, null none).
     *
-    * Unlike a lazy query builder, this runs Spark work at call time: the
-    * deduplicated CMS side (one row per key) is collected to the driver
-    * once and re-served as a local relation to every stage that reads it.
-    * That is the table the exact stage broadcasts anyway, so driver memory
-    * is bounded as before — by the CMS side's size, ≤ 50k rows under the
-    * reference's fetch cap. Everything on the scraped side stays lazy, and
-    * nothing is persisted.
-    *
-    * NOTE: the hit and miss branches both descend from the exact join, and
-    * the misses feed both the signature index and the final re-attach, so
-    * one action scans the scraped side three times. For a very large scraped
-    * side, `.cache()` it before calling. */
+    * Unlike a lazy query builder, this runs one Spark job at call time: the
+    * CMS side is collected to the driver once, deduplicated there (one row
+    * per key) and carried in the returned plan. Driver memory is bounded
+    * by the CMS side's size, ≤ 50k rows under the reference's fetch cap —
+    * the table an exact broadcast join would hold anyway. The scraped side
+    * stays lazy and is read once per action; nothing is persisted. */
   def enrich(scraped: DataFrame, cms: DataFrame,
       cutoff: Double = DefaultCutoff): DataFrame = {
     val cmsCols = EnrichedColumns.filter(cms.columns.contains)
-    // Deterministic one-row-per-key CMS side: duplicate campus_id keys (real
-    // after the lossy key normalization) must not fan scraped rows out. The
-    // reference's dict-style index keeps one row; we keep the struct-min row
-    // (deterministic under any partitioning, unlike dropDuplicates). A null
-    // key can match nothing, so it is dropped before the collect.
-    val dedup = cms.filter(col("campus_id").isNotNull)
-      .groupBy(col("campus_id").as("__cms_key"))
-      .agg(min(struct(cmsCols.map(col): _*)).as("__r"))
-      .select((col("__cms_key") +: length(col("__cms_key")).as("__lb") +:
-        cmsCols.map(c => col(s"__r.$c").as(c))): _*)
-    val cmsRows = dedup.collect()
-    val cmsSel = scraped.sparkSession.createDataFrame(
-      java.util.Arrays.asList(cmsRows: _*), dedup.schema)
-    val cmsAttrs = cmsSel.drop("__lb")
-
-    // Stage 1 — exact broadcast hash join.
-    val exact = scraped.join(broadcast(cmsAttrs),
-      scraped("campus_id") === cmsAttrs("__cms_key"), "left")
-    val hit = exact.filter(col("__cms_key").isNotNull)
-      .withColumn("match_kind", lit("exact"))
-      .withColumn("match_ratio", lit(1.0))
-    // The fuzzy score and winner depend only on the key pair, so the index
-    // and the confirm run once per DISTINCT miss key; the winners are joined
-    // back onto the miss rows by key below.
-    val miss = exact.filter(col("__cms_key").isNull)
-      .drop("__cms_key" +: cmsCols: _*)
-    val missKeys = miss.select(col("campus_id").as("__mkey"))
-      .filter(col("__mkey").isNotNull).distinct()
-
-    // Stage 2 — fuzzy fallback on misses only: INVERTED-INDEX candidate
-    // join + exact confirm, replacing the length-banded cross product
-    // (which stayed |misses|×|CMS| within each band: ~87× wall at the 10×
-    // canary, reps² by construction).
-    //
-    // The pigeonhole theorem behind the index: difflib's ratio is
-    // 2M/(la+lb) where M — the total size of its matching blocks — is the
-    // size of SOME common subsequence, hence M ≤ LCS(a,b). ratio ≥ c
-    // therefore forces LCS ≥ mc := ⌈c·(la+lb)/2⌉, leaving at most
-    // u := la+lb−2·mc unmatched characters; the u unmatched characters
-    // split the common subsequence into at most u+1 contiguous blocks, so
-    // some SHARED CONTIGUOUS SUBSTRING has length ≥ L* := ⌈mc/(u+1)⌉.
-    // Joining on L*-grams is thus a sound prefilter (no ≥cutoff pair is
-    // lost); the exact seqRatioAtLeast confirm decides. At high cutoffs
-    // L* is large and the index is sharp (the gate's 12-char keys at
-    // c = 0.9 give L* = 6 → random collisions ~16⁻⁶); at low cutoffs L*
-    // degrades toward 1-grams — still correct, weaker pruning.
-    //
-    // Float care: mc is computed as ceil(product − 1e-9) so binary
-    // rounding can never push the ceiling ABOVE the exact value
-    // (overstating mc would prune true pairs — unsound); understating by
-    // 1 in razor-edge cases only weakens pruning. L* from mc is pure
-    // integer arithmetic. A pair with mc > min(la,lb) cannot reach the
-    // cutoff at all — u < 0 encodes it as an unreachable gram length.
-    def mcOf(la: Column, lb: Column): Column =
-      ceil((la + lb).cast("double") * lit(cutoff) / 2.0 - lit(1e-9))
-        .cast("long")
-    def lstarOf(la: Column, lb: Column): Column = {
-      val mc = mcOf(la, lb)
-      val u = (la + lb).cast("long") - mc * 2L
-      when(u >= 0L, greatest(
-          floor((mc + u).cast("double") / (u + 1L).cast("double")).cast("int"),
-          lit(1)))
-        .otherwise(lit(Int.MaxValue))
-    }
-    def gramsOf(key: Column, gramLen: Column): Column =
-      when(key.isNotNull && length(key) >= gramLen,
-        array_distinct(transform(
-          sequence(lit(1), length(key) - gramLen + lit(1)),
-          i => key.substr(i, gramLen))))
-        .otherwise(array().cast("array<string>"))
-    // Deletion-variant signatures for the SHARP classes (the SymSpell /
-    // FastSS device): when a class allows at most ONE unmatched char per
-    // side (Da ≤ 1 and Db ≤ 1), deleting each side's unmatched chars
-    // leaves the matched subsequence ITSELF on both sides — an equal
-    // string of length M. Joining delete-{0,1} variants is therefore a
-    // complete candidate generator for those classes, with a signature
-    // as long as the key (collision-free on hashed ids) where the gram
-    // fallback's L* would collapse to 4 chars and pay linear bucket
-    // density — the residual quadratic decoded at the 100× canary.
-    def delVariantsOf(key: Column, maxDel: Column): Column =
-      when(key.isNull, array().cast("array<string>"))
-        .when(maxDel === 0, array(key))
-        .otherwise(array_distinct(concat(array(key),
-          transform(sequence(lit(1), length(key)),
-            i => concat(key.substr(lit(1), i - 1),
-              key.substr(i + 1, length(key)))))))
-    // Per-class signature set for one side: the class is (la, lb); the
-    // side's own deletion budget is Da = la − mc for the miss side,
-    // Db = lb − mc for the CMS side. Tags keep the two mechanisms'
-    // keyspaces disjoint; a class with a negative budget cannot reach
-    // the cutoff at all (mc exceeds one key's length) and emits nothing.
-    def sigsOf(key: Column, la: Column, lb: Column,
-        ownIsMissSide: Boolean): Column = {
-      val mc = mcOf(la, lb)
-      val da = la.cast("long") - mc
-      val db = lb.cast("long") - mc
-      val own = if (ownIsMissSide) da else db
-      when(da < 0L || db < 0L, array().cast("array<string>"))
-        .when(da <= 1L && db <= 1L,
-          transform(delVariantsOf(key, own), s => concat(lit("D:"), s)))
-        .otherwise(
-          transform(gramsOf(key, lstarOf(la, lb)), s => concat(lit("G:"), s)))
-    }
-    // Both sides explode into per-(la, lb) CLASS signature rows — the
-    // class lengths ride the join key, so each class decides its own
-    // mechanism consistently on both sides. Bands (±1 widened) come from
-    // the ratio's own length bound: 2·min(la,lb)/(la+lb) ≥ c restricts
-    // the partner length to [len·c/(2−c), len·(2−c)/c].
-    def bandOf(len: Column): Column = sequence(
-      greatest(floor(len * lit(cutoff) / (lit(2.0) - cutoff)).cast("int")
-        - 1, lit(1)),
-      ceil(len * (lit(2.0) - cutoff) / lit(cutoff)).cast("int") + 1)
-    val cmsSigs = cmsSel.select(col("__cms_key"), col("__lb"))
-      .withColumn("__la", explode(bandOf(col("__lb"))))
-      .select(col("__cms_key"), col("__la"), col("__lb"),
-        explode(sigsOf(col("__cms_key"), col("__la"), col("__lb"),
-          ownIsMissSide = false)).as("__sig"))
-    // The miss side only emits classes whose lb actually EXISTS on the
-    // CMS side: the distinct CMS key lengths (at most a few dozen values
-    // under the reference's 50k fetch cap) are read off the collected rows
-    // and ride the plan as an array literal. Pruning dead classes cuts the
-    // signature explode volume by the dead-band factor — at the 100×
-    // canary the CMS histogram is a single length, so this drops ~4/5 of
-    // the exploded rows before the shuffle.
-    val cmsLens = typedLit(cmsRows.map(_.getInt(1)).distinct.sorted.toSeq)
-    val missSigs = missKeys
-      .withColumn("__la", length(col("__mkey")))
-      .withColumn("__lb", explode(array_intersect(bandOf(col("__la")), cmsLens)))
-      .select(col("__mkey"), col("__la"), col("__lb"),
-        explode(sigsOf(col("__mkey"), col("__la"), col("__lb"),
-          ownIsMissSide = true)).as("__sig"))
-    // The candidate join is keyed (la, lb, signature) — the
-    // inverted-index shape (Dedup's shingle joins): no broadcast forced,
-    // so at the 50k production cap the exploded index shuffles instead
-    // of blowing the driver. AQE broadcasts it when it is actually small.
-    val candidates = missSigs.join(cmsSigs, Seq("__la", "__lb", "__sig"))
-      .select(col("__mkey"), col("__cms_key"))
-    // Exact confirm, then top-1 per miss KEY as one min(struct) aggregate
-    // over (−ratio, cms key): ratio desc, ties to the smallest key. A pair
-    // found through several signatures repeats, which min ignores. Pairs
-    // the index pruned are all sub-cutoff, and sub-cutoff candidates are
-    // dropped before the aggregate, so a key with no ≥cutoff candidate
-    // has no row here.
-    val best = candidates
-      .withColumn("__ratio", SequenceMatcherRatio.seqRatioAtLeast(
-        col("__mkey"), col("__cms_key"), cutoff))
-      .filter(col("__ratio") >= cutoff)
-      .groupBy(col("__mkey"))
-      .agg(min(struct((-col("__ratio")).as("k1"), col("__cms_key").as("k2")))
-        .as("m"))
-      .select(col("__mkey"), col("m.k2").as("__cms_key"),
-        (-col("m.k1")).as("match_ratio"))
-      .join(broadcast(cmsAttrs), Seq("__cms_key"))
-    // LEFT join by key back onto the miss rows: duplicate scraped rows each
-    // keep their own row, and a miss with no winner (including a null key)
-    // emits its 'none' row with nulled attributes and ratio.
-    val fuzzy = miss.join(best, col("campus_id") === col("__mkey"), "left")
-      .withColumn("match_kind",
-        when(col("__cms_key").isNotNull, lit("fuzzy")).otherwise(lit("none")))
-
-    val outCols: Seq[Column] =
-      (scraped.columns.map(col) ++ cmsCols.map(col) :+
-        col("match_kind") :+ col("match_ratio")).toSeq
-    hit.select(outCols: _*).union(fuzzy.select(outCols: _*))
+    // A null key can match nothing, so it is dropped before the collect.
+    // Duplicate campus_id keys (real after the lossy key normalization)
+    // must not fan scraped rows out: the reference's dict-style index keeps
+    // one row; the index keeps the struct-min row (row-order independent).
+    val cmsSide = cms.filter(col("campus_id").isNotNull)
+      .select((col("campus_id").cast("string") +: cmsCols.map(col)): _*)
+    val index = CmsIndex(cmsSide.collect(), cmsSide.schema, cutoff)
+    val m = ColumnBridge.column(CmsMatch(
+      ColumnBridge.expression(col("campus_id").cast("string")), index))
+    val outCols: Seq[Column] = (scraped.columns.map(col) ++
+      (cmsCols :+ "match_kind" :+ "match_ratio").map(c => col(s"__m.$c").as(c))).toSeq
+    scraped.select((scraped.columns.map(col) :+ m.as("__m")): _*)
+      .select(outCols: _*)
   }
 
   /** The registry's full 30-column projection with ""-fill for anything the

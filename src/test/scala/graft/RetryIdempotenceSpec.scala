@@ -82,10 +82,10 @@ class RetryIdempotenceSpec extends SparkSpec {
   }
 
   test("per-key fuzzy confirm survives a task retry at the source scan") {
-    // RegistryEnricher's fuzzy branch takes the distinct exact-join miss
-    // keys through the signature index and the confirm, then joins each
-    // key's winner back onto the miss rows by key. A retried task in the
-    // scraped-side scan feeds both the key set and the miss rows; its
+    // RegistryEnricher matches each scraped row through cms_match, which
+    // takes a missed key through the signature index and the confirm once
+    // and memoizes its winner per key. A retried task in the scraped-side
+    // scan rebuilds that memo from a fresh copy of the index; its
     // recompute must give the same winners and the same rows.
     val base = graft.core.Tables.table(spark, sf("sf0.001"), "customer")
     // every scraped key misses exactly (trailing 'x') but stays within

@@ -93,8 +93,13 @@ class FuzzySpec extends SparkSpec {
   }
 
   test("job budget: one registry build, and it persists nothing") {
-    val (scraped, cms) = (scrapedFixture, cmsFixture)
-    val out = Files.createTempDirectory("graft-registry-jobs").resolve("registry").toString
+    val dir = Files.createTempDirectory("graft-registry-jobs")
+    val out = dir.resolve("registry").toString
+    // The CMS side is file-backed, as in a real build: a local-relation
+    // fixture would be collected without a job. Its footer read happens
+    // here, before counting starts.
+    cmsFixture.write.parquet(dir.resolve("cms").toString)
+    val (scraped, cms) = (scrapedFixture, spark.read.parquet(dir.resolve("cms").toString))
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
@@ -108,14 +113,14 @@ class FuzzySpec extends SparkSpec {
         .write.parquet(out)
       Bus.drain(sc)
     } finally sc.removeSparkListener(listener)
-    // At the enrich call, the CMS dedup's map stage and its collect (2).
-    // At the write: broadcasts of the local CMS side, with attributes and
-    // key-only (2), and of its signature index (1); the miss-key distinct
-    // and the miss rows' shuffle for the re-attach join (2); the write (1).
-    // Nothing is persisted, counted or read back.
-    assert(jobs.get == 8)
+    // The CMS collect at the enrich call (1) and the write (1): the match
+    // is one expression over the scraped rows, so the build has no join,
+    // shuffle or broadcast. Nothing is persisted, counted or read back.
+    assert(jobs.get == 2)
     assert(sc.getPersistentRDDs.keySet == cached)
-    assert(spark.read.parquet(out).count() == 4)
+    val written = spark.read.parquet(out)
+    assert(written.count() == 4)
+    assert(written.filter(col("cms_rating") =!= "").count() == 3)
   }
 
   // Structure-free insurance for the signature prefilter (deletion
@@ -190,13 +195,12 @@ class FuzzySpec extends SparkSpec {
     val cmsEmpty = Seq.empty[(String, String, String, String, String, String)]
       .toDF("campus_id", "cms_rating", "hospital_type", "county",
         "telephone_num", "cms_zip")
-    // Empty CMS: the signature index and the length histogram are empty,
+    // Empty CMS: the index has no keys and no length classes,
     // but every scraped row must still emit its 'none' row.
     val out = RegistryEnricher.enrich(scraped, cmsEmpty).collect()
     assert(out.length == 2)
     assert(out.forall(_.getAs[String]("match_kind") == "none"))
-    // Null scraped key: drops out of candidate generation (null grams /
-    // variants), survives through the left join as 'none'.
+    // Null scraped key: never looked up, and still emits its 'none' row.
     val cms = Seq(("abc", "5", "Acute", "Cty", "404", "1"))
       .toDF("campus_id", "cms_rating", "hospital_type", "county",
         "telephone_num", "cms_zip")
