@@ -105,6 +105,37 @@ class ExtractorSpec extends SparkSpec {
     assert(out.count() == 4)
   }
 
+  private val wideOverrideCsv =
+    """hospital_name,last_updated_on,version,hospital_location,hospital_address
+      |General,2024-07-01,2.0.0,Atlanta,1 Main St
+      |description,code|1,code|1|type,code|2,code|2|type,code|3,code|3|type,standard_charge|Aetna|PPO|negotiated_dollar,negotiated_dollar|Aetna|PPO,standard_charge|Aetna|PPO|methodology,standard_charge|Cigna|EPO|negotiated_dollar,additional_payer_notes|Cigna|EPO,additional_generic_notes
+      |dup pair,470,MS-DRG,470,drg,471,FOO,10.00,11.00,m1,20.00,,g
+      |later empty,99,CPT,,,,,10.00,,m2,,n,
+      |no payers,98,CPT,,,,,,,,,,
+      |empty code,,CPT,97,,,,5.00,,,,,
+      |same code two types,55,CPT,55,HCPCS,,,1.00,2.00,,3.00,cn,gn
+      |""".stripMargin
+
+  test("wide extract: later non-empty column wins, pairs merge per (code, type), empty groups drop") {
+    val p = write("wide-override.csv", wideOverrideCsv)
+    val out = WideExtractor.extractFile(spark, p, "General", "30303")
+    assert(out.columns.toSeq == graft.core.Schemas.CanonicalColumns)
+    val rows = out.collect().map(r => (r.getString(2), r.getString(3), r.getString(7),
+      r.getString(9), r.getString(10), r.getString(13), r.getString(20))).toSeq.sorted
+    // 470 under MS-DRG and drg is one DRG pair; FOO is rejected. A later
+    // non-empty column overrides an earlier one, a later empty one does not.
+    // A row with no payer cell or no complete kept pair gives no rows.
+    assert(rows == Seq(
+      ("470", "DRG", "Aetna", "PPO", "11.00", "m1", "g"),
+      ("470", "DRG", "Cigna", "EPO", "20.00", "", "g"),
+      ("55", "CPT", "Aetna", "PPO", "2.00", "", "gn"),
+      ("55", "CPT", "Cigna", "EPO", "3.00", "", "gn, cn"),
+      ("55", "HCPCS", "Aetna", "PPO", "2.00", "", "gn"),
+      ("55", "HCPCS", "Cigna", "EPO", "3.00", "", "gn, cn"),
+      ("99", "CPT", "Aetna", "PPO", "10.00", "m2", ""),
+      ("99", "CPT", "Cigna", "EPO", "", "", "n")))
+  }
+
   private val jsonMrf =
     """{ "hospital_name": "General", "hospital_location": "Atlanta",
       |  "hospital_address": "1 Main St, Atlanta, GA 30303",
