@@ -48,7 +48,6 @@ object EtlPipeline {
 
   def run(spark: SparkSession, registryPath: String, campusId: String,
       baseDir: String, processedBy: String,
-      formatOverride: Option[String] = None,
       lakePath: Option[String] = None): RunResult = {
 
     // S1/P1 — registry scan + key lookup; error when absent. Collected once:
@@ -62,7 +61,7 @@ object EtlPipeline {
     def field(n: String): String =
       Option(rec.getAs[Any](n)).map(_.toString).getOrElse("")
     val system = field("healthcare_system").toLowerCase.replace(" ", "_") // F15
-    val structure = formatOverride.getOrElse(field("structure")).toLowerCase
+    val structure = field("structure").toLowerCase
     require(Structures.contains(structure), s"Unknown structure '$structure'")
     val hospitalName = field("hospital_name")
     val zipCode = field("zip_code")

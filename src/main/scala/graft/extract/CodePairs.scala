@@ -42,6 +42,20 @@ object CodePairs {
   def kept(exploded: DataFrame): DataFrame =
     exploded.filter(col("__code_type").isNotNull)
 
+  /** A row's distinct kept pairs as an array of (code, code_type) structs,
+    * with one null in place of the dropped ones — so `470|MS-DRG` and
+    * `470|drg` are one pair. The same skip and allowlist as
+    * [[explodePairs]] + [[kept]], evaluated in-row. */
+  def keptPairSet(df: DataFrame): Column =
+    array_distinct(array((1 to 4).map { i =>
+      val code = colOr(df, s"code|$i")
+      val codeType = element_at(normalizeMap, upper(colOr(df, s"code|$i|type")))
+      // length, not =!= "": Column's equality warns that lit("") === ""
+      // (a missing column) is trivially true
+      when(length(code) > 0 && codeType.isNotNull,
+        struct(code.as("code"), codeType.as("code_type")))
+    }: _*))
+
   /** A3 — rejected-type counts per raw type. */
   def unknownTypeCounts(exploded: DataFrame): DataFrame =
     exploded.filter(col("__code_type").isNull)

@@ -11,20 +11,17 @@ import CodePairs.colOr
   *
   * Dynamic per-payer columns `standard_charge|{Payer}|{Plan}|{field}` (field
   * last when >3 segments) or `{field}|{Payer}|{Plan}` (field first at exactly
-  * 3) are classified DRIVER-side from the schema (P11 — metadata, not data),
-  * melted to (payer, plan, field, value) cells via a narrow explode (U2),
-  * crossed with the ≤4 code pairs, then re-pivoted one row per
-  * (source row, code, type, payer, plan) with an explicit 6-value pivot (U3).
+  * 3) are classified DRIVER-side from the schema (P11 — metadata, not data)
+  * into one struct per (payer, plan) group (U2). Each source row explodes
+  * its distinct kept code pairs × its groups with a non-empty field (U3), so
+  * the whole extract is a narrow plan, like the tall and JSON extractors:
+  * zero shuffles, pipelined with the CSV scan at any scale.
   *
-  * Scale: the reference holds the whole file and a python dict in RAM (its
-  * one genuine 100TB-breaker, wide_format_csv_extractor.py:87,102-135); here
-  * the melt is pipelined and the re-pivot is ONE hash-aggregate shuffle keyed
-  * by (rowid, code, payer, plan) — uniformly distributed, AQE-safe.
-  *
-  * Pinned semantics (SURVEY §7.4): a source row-id is carried so identical
-  * (code, payer, plan) from different source rows never merge; within one
-  * source row, later classified columns overwrite earlier ones
-  * (dict-assignment order) — replicated with max_by(value, column-index).
+  * Pinned semantics (SURVEY §7.4): rows of different source rows never
+  * merge, even for the same (code, payer, plan); within one source row a
+  * later classified column overwrites an earlier one (dict-assignment
+  * order) unless it is empty — each group field is a coalesce over its
+  * columns in descending column index, with "" read as absent (P8).
   */
 object WideExtractor {
 
@@ -36,9 +33,6 @@ object WideExtractor {
     "estimated_amount" -> "estimated amount",
     "methodology" -> "negotiated methodology",
     "additional_payer_notes" -> "additional notes")
-
-  val FieldTokens: Seq[String] = Seq("negotiated_dollar", "negotiated_percentage",
-    "negotiated_algorithm", "estimated_amount", "methodology", "additional_payer_notes")
 
   final case class PayerColumn(name: String, field: String, payer: String,
       plan: String, index: Int)
@@ -57,69 +51,59 @@ object WideExtractor {
       }
     }
 
-  private val staticSources: Seq[(String, String)] = Seq(
+  /** canonical column → its source column, for the per-row columns. */
+  private val staticSources: Map[String, String] = Map(
     "description" -> "description",
-    "drug_unit_of_measurement" -> "drug unit",
-    "drug_type_of_measurement" -> "drug type",
-    "standard_charge|gross" -> "gross charge",
-    "standard_charge|discounted_cash" -> "discounted cash price",
-    "standard_charge|min" -> "min price",
-    "standard_charge|max" -> "max price",
+    "drug unit" -> "drug_unit_of_measurement",
+    "drug type" -> "drug_type_of_measurement",
+    "gross charge" -> "standard_charge|gross",
+    "discounted cash price" -> "standard_charge|discounted_cash",
+    "min price" -> "standard_charge|min",
+    "max price" -> "standard_charge|max",
     "setting" -> "setting",
-    "additional_generic_notes" -> "__generic_notes",
     "modifiers" -> "modifiers")
 
   /** Full extract over an already-loaded body frame (MrfCsv.readBody). */
   def extract(body: DataFrame, hospitalName: String, zipCode: String): DataFrame = {
     val payerCols = classifyColumns(body.columns.toSeq)
-    val filled = body.na.fill("").withColumn("__rowid", monotonically_increasing_id())
+    val nonEmpty = (c: Column) => when(length(c) > 0, c) // "" and null → null
 
-    // U2 — melt the classified columns into (payer, plan, field, idx, value).
-    val cells = array(payerCols.map { pc =>
-      struct(lit(pc.payer).as("payer"), lit(pc.plan).as("plan"),
-        lit(pc.field).as("field"), lit(pc.index).as("idx"),
-        col(pc.name).as("value"))
-    }: _*)
-    val melted = filled
-      .withColumn("__cell", explode(cells))
-      .filter(col("__cell.value") =!= "") // P8: skip empty cells
-    // ≤4 code pairs per source row (shared with the tall path).
-    val exploded = CodePairs.kept(CodePairs.explodePairs(melted))
+    // U2 — one struct per (payer, plan): each canonical field is its last
+    // non-empty column.
+    val groups = payerCols.map(pc => (pc.payer, pc.plan)).distinct.map { case (payer, plan) =>
+      val own = payerCols.filter(pc => pc.payer == payer && pc.plan == plan).sortBy(-_.index)
+      val fields = FieldMap.toSeq.map { case (tok, dst) =>
+        coalesce(own.filter(_.field == tok).map(pc => nonEmpty(col(pc.name))) :+
+          lit(null).cast("string"): _*).as(dst)
+      }
+      struct(lit(payer).as("payer") +: lit(plan).as("plan") +: fields: _*)
+    }
+    val group = (f: String) => col("__group").getField(f)
 
-    // U3 — re-pivot one row per (source row, code, type, payer, plan).
-    val staticKeys = staticSources.map { case (src, dst) => colOr(filled, src).as(dst) }
-    val repivoted = exploded
-      .select(Seq(col("__rowid"), col("__code"), col("__code_type"),
-        col("__cell.payer").as("__payer"), col("__cell.plan").as("__plan"),
-        col("__cell.field").as("__field"), col("__cell.idx").as("__idx"),
-        col("__cell.value").as("__value")) ++ staticKeys: _*)
-      .groupBy(Seq(col("__rowid"), col("__code"), col("__code_type"),
-        col("__payer"), col("__plan")) ++
-        staticSources.map { case (_, dst) => col(dst) }: _*)
-      .pivot(col("__field"), FieldTokens)
-      .agg(max_by(col("__value"), col("__idx")))
+    // U3 — one row per (distinct kept code pair, group with a value).
+    val exploded = body
+      .withColumn("__group", explode(array(groups: _*)))
+      .filter(coalesce(FieldMap.values.toSeq.map(group): _*).isNotNull)
+      .withColumn("__pair", explode(CodePairs.keptPairSet(body)))
+      .filter(col("__pair").isNotNull)
 
-    // F12 — merge generic + payer notes (empties dropped, ", " separator).
-    val nz = (c: Column) => when(c.isNull || c === "", lit(null)).otherwise(c)
-    val notes = concat_ws(", ", nz(col("__generic_notes")),
-      nz(col("additional_payer_notes")))
-
-    val pivoted = FieldMap.map { case (tok, dst) => tok -> dst }
     val cols: Seq[Column] = Schemas.CanonicalColumns.map {
       case "hospital name" => lit(hospitalName).as("hospital name")
       case "zip code" => lit(zipCode).as("zip code")
-      case "code" => col("__code").as("code")
-      case "code type" => col("__code_type").as("code type")
-      case "insurance payer name" => col("__payer").as("insurance payer name")
+      case "code" => col("__pair.code").as("code")
+      case "code type" => col("__pair.code_type").as("code type")
+      case "insurance payer name" => group("payer").as("insurance payer name")
       case "insurance payer id" => lit("").as("insurance payer id")
-      case "insurance plan name" => col("__plan").as("insurance plan name")
-      case "additional notes" => notes.as("additional notes")
-      case canonical if pivoted.exists(_._2 == canonical) =>
-        val tok = pivoted.collectFirst { case (t, d) if d == canonical => t }.get
-        coalesce(col(tok), lit("")).as(canonical)
-      case canonical => col(canonical) // static key columns already aliased
+      case "insurance plan name" => group("plan").as("insurance plan name")
+      // F12 — merge generic + payer notes (empties dropped, ", " separator).
+      case "additional notes" => concat_ws(", ",
+        nonEmpty(colOr(body, "additional_generic_notes")),
+        group("additional notes")).as("additional notes")
+      case canonical if staticSources.contains(canonical) =>
+        colOr(body, staticSources(canonical)).as(canonical)
+      case canonical => coalesce(group(canonical), lit("")).as(canonical)
     }
-    repivoted.select(cols: _*)
+    exploded.select(cols: _*)
   }
 
   def extractFile(spark: SparkSession, path: String,

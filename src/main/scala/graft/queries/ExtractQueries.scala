@@ -54,7 +54,7 @@ object ExtractQueries {
           col("gross charge").as("gross_charge"))
     }),
 
-    // Wide path: driver column classify + melt + re-pivot + notes merge (U2/U3).
+    // Wide path: header payer groups, pair × group explode, notes merge (U2/U3).
     "extract_wide_canonical" -> ((s, dir) => {
       val body = table(s, dir, "part").select(
         col("p_name").as("description"),

@@ -33,6 +33,12 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"), p)
   }
 
+  test("wide extract is a pure narrow plan — zero exchanges") {
+    val df = graft.queries.ExtractQueries.queries("extract_wide_canonical")(spark, sf("sf0.001"))
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), p)
+  }
+
   test("bucketed co-located layout joins without any shuffle exchange") {
     val wh = java.nio.file.Files.createTempDirectory("graft-buckets").toString
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -52,13 +52,13 @@ class RetryIdempotenceSpec extends SparkSpec {
       lit("fee schedule").as("standard_charge|Aetna|PPO|methodology"),
       concat(lit("pn "), col("p_brand")).as("additional_payer_notes|Aetna|PPO"))
 
-  test("wide re-pivot __rowid pairing survives a task retry in the id-assigning stage") {
+  test("wide extract survives a task retry in its scan stage") {
     val clean = rows(graft.extract.WideExtractor
       .extract(wideBody, "General", "30303"))
     assert(clean.nonEmpty)
-    // plant the fail-once INSIDE the stage that computes __rowid: the
-    // filter fuses into the same whole-stage pipeline as the
-    // monotonically_increasing_id projection over the parquet scan
+    // the extract is one narrow stage over the parquet scan (no row id,
+    // no shuffle): the fail-once filter fuses into it, so the retry
+    // recomputes the whole extract
     val injected = graft.extract.WideExtractor
       .extract(wideBody.filter(flakyTrue("wide")), "General", "30303")
     assert(RetryIdempotenceSpec.attempts.get("wide") == null)

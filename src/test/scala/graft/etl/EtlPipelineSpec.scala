@@ -190,11 +190,11 @@ class EtlPipelineSpec extends SparkSpec {
         structure -> jobs.get
     }.toMap finally sc.removeSparkListener(listener)
     // Per run: registry schema + collect (2); the CSV body's header line
-    // (1, CSV only); the extract write (1, its map stage too on wide); the
-    // clean write with the dedup map stage and the cache build (3), which
-    // also yields the rule summary; the quarantine write (1); devlog append
-    // and registry write (2). Nothing runs only to count.
-    assert(counts == Map("tall csv" -> 10, "wide csv" -> 11, "json" -> 9))
+    // (1, CSV only); the extract write (1, a narrow plan on every
+    // structure); the clean write with the dedup map stage and the cache
+    // build (3), which also yields the rule summary; the quarantine write
+    // (1); devlog append and registry write (2). Nothing runs only to count.
+    assert(counts == Map("tall csv" -> 10, "wide csv" -> 10, "json" -> 9))
     assert(sc.getPersistentRDDs.keySet == cached)
     assert(!Files.exists(Paths.get(s"$base/data/scratch/$system/j1_mrf_split")))
   }
