@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.clean.{Cleaning, Rules}
 import graft.core.Schemas
@@ -24,15 +25,19 @@ import graft.meta.Devlog
   * {system}/...` keyed by the system slug (F15) — which doubles as the
   * partition key a 1000-hospital run would parallelize over.
   *
-  * One-pass accounting: each phase materializes once, and every number the
-  * run returns comes out of a job that already runs. The extracted row
-  * count is observed on the extract CSV write; the rule summary, with the
-  * pre-dedup, deduped, clean and violation counts over the
-  * multiplicity-carrying dedup, is observed on the clean CSV write; the
-  * registry is collected once at the lookup and rewritten from that
-  * snapshot plus the in-hand devlog entry; the MRF metadata is read on the
-  * driver. No count, read-back or collect job exists only to compute a
-  * number.
+  * Six Spark jobs per campus, whatever the structure: the registry
+  * collect, the extract CSV write, the dedup's map stage, the clean and the
+  * quarantine CSV writes, and the registry write. Every number the run
+  * returns comes out of one of them. The extracted row count is observed on
+  * the extract write; the rule summary, with the pre-dedup, deduped, clean
+  * and violation counts over the multiplicity-carrying dedup, is observed
+  * on the clean write. Both rule writes read the dedup's one shuffle
+  * output, and nothing is cached. What only needs a file's first bytes is
+  * read on the driver: the MRF metadata and CSV header lines, the
+  * registry's schema from a parquet footer. The devlog entry is rendered on
+  * the driver and written as one file, and the registry is rewritten from
+  * the collected snapshot plus that entry. No count, read-back or collect
+  * job exists only to compute a number.
   */
 object EtlPipeline {
 
@@ -53,7 +58,7 @@ object EtlPipeline {
     // S1/P1 — registry scan + key lookup; error when absent. Collected once:
     // the lookup reads this snapshot and the S12 refresh rewrites it (the
     // registry is a small dimension, and its own path is overwritten).
-    val registry = spark.read.parquet(registryPath)
+    val registry = Devlog.readRegistry(spark, registryPath)
     val registryRows = registry.collect()
     val rec = registryRows.find(r => r.getAs[Any]("campus_id") == campusId).getOrElse(
       throw new IllegalArgumentException(
@@ -70,10 +75,8 @@ object EtlPipeline {
     // A huge JSON MRF is split here before extraction; removed with the run.
     val splitScratch = s"$baseDir/data/scratch/$system/${campusId}_mrf_split"
 
-    // The cached frame and the split scratch are released however the run
-    // ends: a long-lived fleet driver must not keep a failed campus's frame
-    // pinned or its scratch on disk.
-    var tagged: Option[DataFrame] = None
+    // The split scratch is removed however the run ends: a long-lived
+    // fleet driver must not keep a failed campus's scratch on disk.
     try {
       // EXTRACT — dispatch to the structure's extractor; capture the MRF's
       // own metadata (version/last_updated_on/address come from the FILE,
@@ -104,11 +107,15 @@ object EtlPipeline {
       // dedup keeps each row's multiplicity, so the rule summary also yields
       // the pre- and post-dedup row counts; the summary is observed on the
       // clean write, below the split's filter, so it sees every tagged row.
+      // The tagged frame is re-wrapped around its executed plan's RDD
+      // (planning it runs the dedup's map stage), so the clean and the
+      // quarantine write read that one shuffle output instead of a cache.
       val extracted = spark.read.option("header", "true")
         .schema(Schemas.canonicalIngest).csv(extractedPath)
-      val t = Rules.tagViolations(
-        Cleaning.dedupCounted(Cleaning.cleanAllPreDedup(extracted))).cache()
-      tagged = Some(t)
+      val tagged = Rules.tagViolations(
+        Cleaning.dedupCounted(Cleaning.cleanAllPreDedup(extracted)))
+      val t = ColumnBridge.internalCreateDataFrame(spark,
+        ColumnBridge.toInternalRdd(tagged), tagged.schema)
       val (observed, summaryRow) = Rules.observeSummary(t, Cleaning.dedupCounts)
       val clean = Rules.split(observed.drop(Cleaning.Multiplicity))._1
       val violations = Rules.split(t.drop(Cleaning.Multiplicity))._2
@@ -136,9 +143,10 @@ object EtlPipeline {
       val violationRows = dedupedRows - cleanRows
       val dupsDropped = summary.getAs[Long]("pre_dedup_rows") - dedupedRows
 
-      // S11 — devlog append (seq = ns timestamp for L1 ordering). The 4dp
-      // devlog rounding (cleaning_utils.py:231) is what flows to the registry
-      // and the run result.
+      // S11 — devlog append (seq = ns timestamp for L1 ordering), rendered
+      // and written on the driver. The 4dp devlog rounding
+      // (cleaning_utils.py:231) is what flows to the registry and the run
+      // result.
       val meta = Devlog.metadataFromSummary(summary, dupsDropped)
       val devlogPath = s"$baseDir/data/logs/devlogs/$system/${campusId}_devlog"
       val entry = Devlog.DevlogEntry(
@@ -166,7 +174,6 @@ object EtlPipeline {
         violationRows, dupsDropped, meta.final_transparency_score, extractedPath,
         cleanedPath, quarantinePath, outputMb)
     } finally {
-      tagged.foreach(_.unpersist())
       val scratch = new Path(splitScratch)
       scratch.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(scratch, true)
     }
@@ -186,7 +193,7 @@ object EtlPipeline {
     * plans themselves are distributed. Sequential here (local mode). */
   def runSystem(spark: SparkSession, registryPath: String, system: String,
       baseDir: String, processedBy: String): Seq[RunResult] = {
-    val ids = systemRegistry(spark.read.parquet(registryPath), system)
+    val ids = systemRegistry(Devlog.readRegistry(spark, registryPath), system)
       .select(col("campus_id")).collect().map(_.getString(0)).toSeq
     ids.map(id => run(spark, registryPath, id, baseDir, processedBy))
   }

@@ -63,6 +63,10 @@ object WideExtractor {
     "setting" -> "setting",
     "modifiers" -> "modifiers")
 
+  /** A column by its literal name: a dot in a payer or plan name
+    * ("United Ins. Co.") is not a struct path. */
+  private def literalCol(name: String): Column = col(s"`${name.replace("`", "``")}`")
+
   /** Full extract over an already-loaded body frame (MrfCsv.readBody). */
   def extract(body: DataFrame, hospitalName: String, zipCode: String): DataFrame = {
     val payerCols = classifyColumns(body.columns.toSeq)
@@ -73,7 +77,7 @@ object WideExtractor {
     val groups = payerCols.map(pc => (pc.payer, pc.plan)).distinct.map { case (payer, plan) =>
       val own = payerCols.filter(pc => pc.payer == payer && pc.plan == plan).sortBy(-_.index)
       val fields = FieldMap.toSeq.map { case (tok, dst) =>
-        coalesce(own.filter(_.field == tok).map(pc => nonEmpty(col(pc.name))) :+
+        coalesce(own.filter(_.field == tok).map(pc => nonEmpty(literalCol(pc.name))) :+
           lit(null).cast("string"): _*).as(dst)
       }
       struct(lit(payer).as("payer") +: lit(plan).as("plan") +: fields: _*)

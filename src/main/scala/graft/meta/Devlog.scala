@@ -1,7 +1,11 @@
 package graft.meta
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.Conf.RuleNames
 
@@ -62,14 +66,55 @@ object Devlog {
     Seq(entry).toDS().toDF()
   }
 
-  /** S11 — append one devlog entry (JSON lines dataset). */
-  def append(spark: SparkSession, path: String, entry: DevlogEntry): Unit =
-    entryFrame(spark, entry).write.mode("append").json(path)
+  /** S11 — append one devlog entry (JSON lines dataset) as one new part
+    * file. The line is `to_json` over the entry's local relation, which
+    * Spark evaluates on the driver, so no job runs: the same text the JSON
+    * writer gives the row. It is written under a name starting with `_`,
+    * which readers skip, then renamed into place, so a reader never sees a
+    * partial entry. */
+  def append(spark: SparkSession, path: String, entry: DevlogEntry): Unit = {
+    val line = entryFrame(spark, entry).select(to_json(struct(col("*")))).head().getString(0)
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000.json"
+    val tmp = new Path(dir, s"_$name")
+    val out = fs.create(tmp, false)
+    try out.write((line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (!fs.rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"Could not rename $tmp into $dir")
+  }
 
   /** S13 + L1 — latest entry by explicit sequence (devlog.iloc[-1] needs an
     * ordering column in a distributed store). */
   def latest(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path).orderBy(col("seq").desc).limit(1)
+
+  /** S1 — the registry read for its snapshot collect. Its schema comes
+    * from one part file's footer, read on the driver (the row schema
+    * Spark's parquet writer stores in the footer's key-value metadata), so
+    * no job runs to infer it. A registry without that key, or a path with
+    * no part file at its top level, is read with Spark's own inference,
+    * and a missing path fails with Spark's own error. */
+  def readRegistry(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    val part = if (!fs.exists(dir)) None else fs.listStatus(dir)
+      .filter(st => st.isFile && !"_.".contains(st.getPath.getName.head))
+      .map(_.getPath).sortBy(_.getName).headOption
+    part.flatMap { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      finally reader.close()
+    }.flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+  }
 
   /** Registry columns refreshed from the devlog (ETL_pipeline.py:92-103),
     * each with `.get`-style fallback to the existing value (J4). */

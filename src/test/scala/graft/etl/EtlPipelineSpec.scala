@@ -125,8 +125,8 @@ class EtlPipelineSpec extends SparkSpec {
     Seq(("c1", "Acme Health", "General Hospital", "30303", "c1.csv", "tall csv"))
       .toDF("campus_id", "healthcare_system", "hospital_name", "zip_code",
         "raw_filename", "structure").write.parquet(registryPath)
-    // The lake write comes after both frames are cached and materialized;
-    // a regular file at the lake path makes it throw.
+    // The lake write comes after the rule frame is materialized; a regular
+    // file at the lake path makes it throw.
     val lake = Files.writeString(Paths.get(s"$base/lake"), "not a directory")
     val before = spark.sparkContext.getPersistentRDDs.size
     intercept[Exception] {
@@ -189,12 +189,14 @@ class EtlPipelineSpec extends SparkSpec {
         Bus.drain(sc)
         structure -> jobs.get
     }.toMap finally sc.removeSparkListener(listener)
-    // Per run: registry schema + collect (2); the CSV body's header line
-    // (1, CSV only); the extract write (1, a narrow plan on every
-    // structure); the clean write with the dedup map stage and the cache
-    // build (3), which also yields the rule summary; the quarantine write
-    // (1); devlog append and registry write (2). Nothing runs only to count.
-    assert(counts == Map("tall csv" -> 10, "wide csv" -> 10, "json" -> 9))
+    // Per run, on every structure: the registry collect (1; its schema
+    // comes from a parquet footer on the driver); the extract write (1, a
+    // narrow plan, the CSV header read on the driver); the dedup's map
+    // stage (1); the clean write, which also yields the rule summary, and
+    // the quarantine write, both over that shuffle output (2); the registry
+    // write (1). The devlog entry is written on the driver. Nothing runs
+    // only to count, and nothing is cached.
+    assert(counts == Map("tall csv" -> 6, "wide csv" -> 6, "json" -> 6))
     assert(sc.getPersistentRDDs.keySet == cached)
     assert(!Files.exists(Paths.get(s"$base/data/scratch/$system/j1_mrf_split")))
   }

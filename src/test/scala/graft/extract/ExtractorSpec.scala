@@ -136,6 +136,23 @@ class ExtractorSpec extends SparkSpec {
       ("99", "CPT", "Cigna", "EPO", "", "", "n")))
   }
 
+  test("wide extract: a payer or plan name with dots is one column, not a struct path") {
+    val p = write("wide-dotted.csv",
+      """hospital_name,last_updated_on,version,hospital_location,hospital_address
+        |General,2024-07-01,2.0.0,Atlanta,1 Main St
+        |description,code|1,code|1|type,standard_charge|United Ins. Co.|PPO|negotiated_dollar,standard_charge|United Ins. Co.|PPO|methodology,standard_charge|Aetna|P.P.O.|negotiated_dollar
+        |Knee MRI,73721,CPT,150.00,fee schedule,140.00
+        |Blood test,85025,CPT,30.00,,
+        |""".stripMargin)
+    val out = WideExtractor.extractFile(spark, p, "General", "30303")
+    val rows = out.collect().map(r => (r.getString(2), r.getString(3), r.getString(7),
+      r.getString(9), r.getString(10), r.getString(13))).toSeq.sorted
+    assert(rows == Seq(
+      ("73721", "CPT", "Aetna", "P.P.O.", "140.00", ""),
+      ("73721", "CPT", "United Ins. Co.", "PPO", "150.00", "fee schedule"),
+      ("85025", "CPT", "United Ins. Co.", "PPO", "30.00", "")))
+  }
+
   private val jsonMrf =
     """{ "hospital_name": "General", "hospital_location": "Atlanta",
       |  "hospital_address": "1 Main St, Atlanta, GA 30303",
@@ -195,6 +212,60 @@ class ExtractorSpec extends SparkSpec {
     assert(body.count() == 6)
     assert(body.filter(col("description") === "hospital_name").count() == 0)
     assert(body.filter(col("description") === "General").count() == 0)
+  }
+
+  private def gzip(name: String, content: String): String = {
+    val p = Paths.get(sys.props("java.io.tmpdir"), s"graft-$name")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(p))
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    p.toString
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("readBody names columns as csv(Dataset) with header=true does and drops every header repeat") {
+    import spark.implicits._
+    val header = "description,code,code,,Code,setting"
+    val body = Seq(
+      "Knee MRI,73721,470,x,y,outpatient",
+      header, // byte-identical to the header: dropped
+      "Blood test,85025,,,z,inpatient",
+      " ",
+      "\"description\",code,code,,Code,setting") // not byte-identical: a row
+    val p = write("dup-header.csv",
+      ("k1,k2" +: "v1,v2" +: header +: body).mkString("\n") + "\n")
+    val ref = spark.read.option("header", "true").csv((header +: body).toDS())
+    val got = MrfCsv.readBody(spark, p)
+    assert(got.columns.toSeq == ref.columns.toSeq)
+    assert(got.columns.distinct.length == 6 && !got.columns.contains(""))
+    assert(sortedRows(got) == sortedRows(ref))
+    assert(got.count() == 3)
+    assert(got.filter(col(got.columns.head) === "description").count() == 1)
+  }
+
+  test("readBody gives a CRLF and a gzip MRF the rows of the LF file") {
+    val lf = MrfCsv.readBody(spark, write("lf.csv", tallCsv))
+    val expected = sortedRows(lf)
+    assert(lf.select("description").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("Blood test", "Knee MRI", "Mystery"))
+    val crlf = tallCsv.replace("\n", "\r\n")
+    for (p <- Seq(write("crlf.csv", crlf), gzip("lf.csv.gz", tallCsv),
+        gzip("crlf.csv.gz", crlf))) {
+      val got = MrfCsv.readBody(spark, p)
+      assert(got.columns.toSeq == lf.columns.toSeq, p)
+      assert(sortedRows(got) == expected, p)
+    }
+  }
+
+  test("readBody drops a first metadata line longer than a split") {
+    val keys = (1 to 40).map(i => s"metadata_key_$i")
+    val mrf = keys.mkString(",") + "\n" + keys.indices.map(i => s"v$i").mkString(",") +
+      "\ndescription,code|1\nKnee MRI,73721\nBlood test,85025\n"
+    assert(keys.mkString(",").length > mrf.length / spark.sparkContext.defaultParallelism)
+    val body = MrfCsv.readBody(spark, write("long-meta.csv", mrf))
+    assert(body.columns.toSeq == Seq("description", "code|1"))
+    assert(sortedRows(body) == Seq("[Blood test,85025]", "[Knee MRI,73721]"))
   }
 
   test("empty/malformed JSON MRF fails loudly instead of extracting nothing") {
