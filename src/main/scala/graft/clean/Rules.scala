@@ -67,8 +67,9 @@ object Rules {
   /** P10 — quarantine split over a tagged frame: clean rows (no tag, tag and
     * bookkeeping columns dropped, matching the written CSV of
     * cleaning_utils.py:201-206) and violating rows (tag kept, matching the
-    * rules-violated CSV of cleaning_utils.py:210-212). Cache `tagged` before
-    * calling when both sides are consumed. */
+    * rules-violated CSV of cleaning_utils.py:210-212). Both sides re-run
+    * `tagged`'s plan; a caller that consumes both reads it from one
+    * materialization (EtlPipeline.run reads the dedup's shuffle output). */
   def split(tagged: DataFrame): (DataFrame, DataFrame) = {
     val clean = tagged.filter(col("rules_violated").isNull)
       .drop("rules_violated", "transparency_score", "negotiated_algorithm_invalid")

@@ -52,8 +52,7 @@ object EtlPipeline {
   val Structures: Set[String] = Set("json", "tall csv", "wide csv")
 
   def run(spark: SparkSession, registryPath: String, campusId: String,
-      baseDir: String, processedBy: String,
-      lakePath: Option[String] = None): RunResult = {
+      baseDir: String, processedBy: String): RunResult = {
 
     // S1/P1 — registry scan + key lookup; error when absent. Collected once:
     // the lookup reads this snapshot and the S12 refresh rewrites it (the
@@ -72,7 +71,8 @@ object EtlPipeline {
     val zipCode = field("zip_code")
     val rawPath = s"$baseDir/data/raw data/$system/${field("raw_filename")}"
     val extractedPath = s"$baseDir/data/extracted data/$system/${campusId}_extracted"
-    // A huge JSON MRF is split here before extraction; removed with the run.
+    // A JSON MRF is split here into one line per charge item; removed with
+    // the run.
     val splitScratch = s"$baseDir/data/scratch/$system/${campusId}_mrf_split"
 
     // The split scratch is removed however the run ends: a long-lived
@@ -123,14 +123,6 @@ object EtlPipeline {
       val cleanedPath = s"$baseDir/data/cleaned data/$system/${campusId}_cleaned"
       val quarantinePath = s"$baseDir/data/logs/rules violations/$system/${campusId}_rules_violated"
       clean.write.mode(SaveMode.Overwrite).option("header", "true").csv(cleanedPath)
-      // Optionally land the cleaned rows in the partitioned lake (the
-      // cross-hospital analytical sink; per-campus CSVs remain the reference-
-      // layout artifacts).
-      lakePath.foreach(lp =>
-        graft.meta.Lake.writeCharges(
-          spark.read.option("header", "true").schema(Schemas.canonicalIngest)
-            .csv(cleanedPath),
-          lp, system, campusId))
       violations.write.mode(SaveMode.Overwrite)
         .option("header", "true").csv(quarantinePath) // S10
 

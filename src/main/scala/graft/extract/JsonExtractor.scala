@@ -1,10 +1,11 @@
 package graft.extract
 
-import com.fasterxml.jackson.core.{JsonParser, JsonToken}
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.core.{JsonEncoding, JsonFactory, JsonGenerator, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.io.SerializedString
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.Using
 
 import graft.core.Schemas
 import graft.enrich.Naming
@@ -18,11 +19,12 @@ import graft.enrich.Naming
   * ETL_pipeline.py:80). Code-type normalization/allowlisting mirrors the CSV
   * extractors for consistency.
   *
-  * Plan shape: multiLine JSON read with an EXPLICIT schema (missing fields →
-  * null, extra fields ignored — the contract is pinned, not inferred), then
-  * three nested explodes (standard_charge_information → code_information ×
-  * standard_charges → payers_information). All narrow once the file is
-  * parsed; at scale, many MRF files in one directory parallelize per-file.
+  * Plan shape: one streamed Jackson pass splits the document into one JSON
+  * line per standard_charge_information element, read with an EXPLICIT
+  * schema (missing fields → null, extra fields ignored — the contract is
+  * pinned, not inferred), then three nested explodes (standard_charge_
+  * information → code_information × standard_charges → payers_information).
+  * All narrow once the lines are parsed, with bounded rows at any file size.
   */
 object JsonExtractor {
 
@@ -58,89 +60,99 @@ object JsonExtractor {
           StructField("additional_payer_notes", StringType),
           StructField("modifiers", StringType)))))))))))))))
 
+  /** The whole-document multiLine read: one row per file. The flagship
+    * extracts through [[extractFile]]; this read is the reference its rows
+    * and metadata are compared against, and the benchmark's traced pass. */
   def readMrf(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", "true").schema(mrfSchema).json(path)
 
   /** The standard_charge_information ELEMENT schema — what one record of
     * the split stream carries. */
-  val sciSchema: StructType = mrfSchema("standard_charge_information")
+  private val sciSchema: StructType = mrfSchema("standard_charge_information")
     .dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
 
   /** The MRF top-level keys the devlog records (json_sampler.py:23-33). */
   val MetadataKeys: Seq[String] = Seq("hospital_name", "hospital_location",
     "hospital_address", "last_updated_on", "version")
 
-  /** File size above which [[extractFile]] abandons the whole-file
-    * multiLine read for the streamed split. A multiLine JSON document is
-    * ONE Spark row — the entire standard_charge_information array
-    * materializes as a single UnsafeRow, so a multi-GB hospital MRF
-    * needs that many bytes of contiguous task heap no matter how many
-    * executors exist. Caught by the r15 tight-heap screen: the 100×
-    * flagship trace OOMed a fresh 8g JVM in the fixture's one-row write
-    * (BufferHolder.grow) — the read side has the identical bound. Below
-    * the threshold the one-row path is cheapest and byte-compatible
-    * with the reference contract; above it, [[splitMrf]] streams the
-    * document once (O(element) memory) into JSON-lines that parse in
-    * parallel with bounded rows. */
-  val WholeFileThresholdBytes: Long = 64L * 1024 * 1024
+  private val Json = new JsonFactory()
 
-  /** One streaming pass (Jackson, O(element) memory) over a huge MRF:
-    * writes each standard_charge_information element as one JSON line
-    * under `outDir` and returns the top-level scalar fields (the devlog
-    * metadata, JSON null as "" like [[metadata]]) read in the same pass
-    * — the ijson shape the reference uses for multi-GB files
-    * (json_sampler.py), kept OFF the default path for files where
-    * whole-file parsing is cheaper. Runs where the file is readable
-    * (driver here; inside a mapPartitions over file paths on a real
-    * cluster — one hospital file per task). */
-  def splitMrf(path: String, outDir: String): Map[String, String] = {
-    val dir = new java.io.File(outDir)
-    dir.mkdirs()
-    val out = new java.io.BufferedWriter(new java.io.FileWriter(
-      new java.io.File(dir, "sci.jsonl")), 1 << 20)
-    try scanTopLevel(path) { (parser, mapper) =>
-      while (parser.nextToken() != JsonToken.END_ARRAY) {
-        out.write(mapper.readTree[JsonNode](parser).toString); out.newLine()
-      }
-    } finally out.close()
-  }
-
-  /** The devlog metadata ([[MetadataKeys]], "" when absent or null) by one
-    * Jackson pass on the driver that skips the charge array: the same
-    * values [[splitMrf]] returns, without a Spark job. */
-  def fileMetadata(path: String): Map[String, String] =
-    metadataKeys(scanTopLevel(path)((parser, _) => parser.skipChildren()))
-
-  private def metadataKeys(all: Map[String, String]): Map[String, String] =
-    MetadataKeys.map(k => k -> all.getOrElse(k, "")).toMap
-
-  /** Walks the MRF's top-level object: `onCharges` consumes the
-    * standard_charge_information array (the parser at its START_ARRAY);
-    * every other top-level scalar is returned, JSON null as "". */
-  private def scanTopLevel(path: String)(
-      onCharges: (JsonParser, ObjectMapper) => Unit): Map[String, String] = {
-    val mapper = new ObjectMapper()
-    val parser = mapper.getFactory.createParser(new java.io.File(path))
+  /** One streaming pass (Jackson, O(element) memory) over an MRF: writes
+    * each standard_charge_information element as one JSON line of
+    * `outDir/sci.jsonl` and returns the devlog metadata ([[MetadataKeys]];
+    * the [[stringText]] of each, "" when absent or null) read in the same
+    * pass — the ijson shape the reference uses for multi-GB files
+    * (json_sampler.py). */
+  private def splitMrf(path: String, outDir: String): Map[String, String] = {
+    new java.io.File(outDir).mkdirs()
     val meta = scala.collection.mutable.Map.empty[String, String]
-    try {
+    Using.Manager { use =>
+      val parser = use(Json.createParser(new java.io.File(path)))
+      val source = use(new java.io.RandomAccessFile(path, "r"))
+      val out = use(Json.createGenerator(new java.io.BufferedOutputStream(
+        new java.io.FileOutputStream(new java.io.File(outDir, "sci.jsonl")), 1 << 20),
+        JsonEncoding.UTF8))
+      out.setRootValueSeparator(new SerializedString("\n"))
       require(parser.nextToken() == JsonToken.START_OBJECT,
         s"MRF root must be a JSON object: $path")
       while (parser.nextToken() != JsonToken.END_OBJECT) {
         val field = parser.currentName()
-        parser.nextToken()
+        val token = parser.nextToken()
         if (field == "standard_charge_information") {
-          require(parser.currentToken() == JsonToken.START_ARRAY,
+          require(token == JsonToken.START_ARRAY,
             s"standard_charge_information must be an array: $path")
-          onCharges(parser, mapper)
-        } else if (parser.currentToken() == JsonToken.VALUE_NULL) {
-          meta(field) = ""
-        } else if (parser.currentToken().isScalarValue) {
-          meta(field) = parser.getText
-        } else parser.skipChildren()
+          while (parser.nextToken() != JsonToken.END_ARRAY)
+            copyValue(parser, source, out, sciSchema)
+        } else if (!MetadataKeys.contains(field)) parser.skipChildren()
+        else meta(field) = if (token == JsonToken.VALUE_NULL) "" else stringText(parser, source)
       }
-    } finally parser.close()
-    meta.toMap
+    }.get
+    MetadataKeys.map(k => k -> meta.getOrElse(k, "")).toMap
   }
+
+  /** Copies the value at the parser's current token to `out` as a JSON read
+    * with `schema` sees it: a string field holds its [[stringText]] as a JSON
+    * string, and fields outside the schema are left out. */
+  private def copyValue(parser: JsonParser, source: java.io.RandomAccessFile,
+      out: JsonGenerator, schema: DataType): Unit =
+    (parser.currentToken(), schema) match {
+      case (JsonToken.START_OBJECT, s: StructType) =>
+        out.writeStartObject()
+        while (parser.nextToken() != JsonToken.END_OBJECT) {
+          val field = s.find(_.name == parser.currentName())
+          parser.nextToken()
+          field match {
+            case Some(f) =>
+              out.writeFieldName(f.name)
+              copyValue(parser, source, out, f.dataType)
+            case None => parser.skipChildren()
+          }
+        }
+        out.writeEndObject()
+      case (JsonToken.START_ARRAY, ArrayType(element, _)) =>
+        out.writeStartArray()
+        while (parser.nextToken() != JsonToken.END_ARRAY)
+          copyValue(parser, source, out, element)
+        out.writeEndArray()
+      case (token, StringType) if token != JsonToken.VALUE_NULL =>
+        out.writeString(stringText(parser, source))
+      case _ => out.copyCurrentStructure(parser)
+    }
+
+  /** The text Spark's JSON read gives a string field holding the parser's
+    * current value (`source` is the parsed file): a string's value, and the
+    * source text of a number, boolean, object or array, whitespace included
+    * ("12.10" stays "12.10"). */
+  private def stringText(parser: JsonParser, source: java.io.RandomAccessFile): String =
+    if (!parser.currentToken().isStructStart) parser.getText
+    else {
+      val start = parser.currentTokenLocation().getByteOffset
+      parser.skipChildren()
+      val bytes = new Array[Byte]((parser.currentLocation().getByteOffset - start).toInt)
+      source.seek(start)
+      source.readFully(bytes)
+      new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+    }
 
   /** Canonical extraction from a loaded MRF frame. */
   def extract(mrf: DataFrame, hospitalName: String, zipCode: String): DataFrame =
@@ -148,10 +160,10 @@ object JsonExtractor {
       mrf.select(explode(col("standard_charge_information")).as("sci")),
       hospitalName, zipCode)
 
-  /** Canonical extraction from already-split standard_charge_information
-    * element rows (`sci` struct column) — the shared tail of the
-    * whole-file and streamed regimes. */
-  def extractFromSci(sciRows: DataFrame, hospitalName: String,
+  /** Canonical extraction from standard_charge_information element rows
+    * (`sci` struct column) — the shared tail of [[extract]] and
+    * [[extractFile]]. */
+  private def extractFromSci(sciRows: DataFrame, hospitalName: String,
       zipCode: String): DataFrame = {
     val s = (c: Column) => coalesce(c.cast(StringType), lit(""))
     val exploded = sciRows
@@ -198,32 +210,19 @@ object JsonExtractor {
     exploded.select(cols: _*)
   }
 
-  /** Two-regime file entry: canonical rows plus the devlog metadata
-    * ([[MetadataKeys]], "" when absent or null). Files up to
-    * [[WholeFileThresholdBytes]] take [[extractWholeFile]], larger ones
-    * [[extractStreamed]] with its split under `scratchDir`; the two give
-    * identical rows and metadata, pinned by ExtractorSpec's regime-parity
-    * test and the unchanged extract_json_canonical oracle. */
-  def extractFile(spark: SparkSession, path: String, hospitalName: String,
-      zipCode: String, scratchDir: String): (DataFrame, Map[String, String]) =
-    if (new java.io.File(path).length() <= WholeFileThresholdBytes)
-      extractWholeFile(spark, path, hospitalName, zipCode)
-    else extractStreamed(spark, path, hospitalName, zipCode, scratchDir)
-
-  /** Whole-file multiLine parse: one row, cheapest, byte-compatible with
-    * the reference contract; the metadata comes from [[fileMetadata]]. */
-  def extractWholeFile(spark: SparkSession, path: String,
-      hospitalName: String, zipCode: String): (DataFrame, Map[String, String]) =
-    (extract(readMrf(spark, path), hospitalName, zipCode), fileMetadata(path))
-
-  /** Streamed split: bounded rows, parallel parse — the only shape that
-    * survives a multi-GB hospital document on a fixed executor heap.
-    * The split is written under `scratchDir`, which the caller owns: the
+  /** The program's JSON extract: canonical rows plus the devlog metadata
+    * ([[MetadataKeys]], "" when absent or null), at every file size. One
+    * streamed pass splits the document into one JSON line per
+    * standard_charge_information element under `scratchDir` and reads the
+    * metadata; the lines parse in parallel as bounded rows, so a multi-GB
+    * hospital document never becomes one task-heap-sized row. Rows and
+    * metadata equal those of [[extract]] and [[metadata]] over [[readMrf]]
+    * (ExtractorSpec's parity test). The caller owns `scratchDir`: the
     * returned frame reads it lazily, so the caller removes it once the
     * frame's last action has run. */
-  def extractStreamed(spark: SparkSession, path: String, hospitalName: String,
+  def extractFile(spark: SparkSession, path: String, hospitalName: String,
       zipCode: String, scratchDir: String): (DataFrame, Map[String, String]) = {
-    val meta = metadataKeys(splitMrf(path, scratchDir))
+    val meta = splitMrf(path, scratchDir)
     val rows = spark.read.schema(sciSchema)
       .json(new java.io.File(scratchDir, "sci.jsonl").getAbsolutePath)
     (extractFromSci(rows.select(struct(
@@ -233,8 +232,8 @@ object JsonExtractor {
   }
 
   /** Devlog metadata from a loaded MRF frame ([[MetadataKeys]]) — a Spark
-    * job over the whole document; [[fileMetadata]] reads the same values
-    * on the driver. */
+    * job over the whole document; [[extractFile]] reads the same values in
+    * its split pass. */
   def metadata(mrf: DataFrame): Map[String, String] = {
     val rows = mrf.select(MetadataKeys.map(col): _*).take(1)
     require(rows.nonEmpty, "JSON MRF parsed to zero rows (empty or malformed file)")

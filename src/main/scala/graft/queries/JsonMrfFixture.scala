@@ -160,10 +160,10 @@ object JsonMrfFixture {
       out.getAbsolutePath
     })
 
-  /** The fixture file's canonical rows through the two-regime
-    * `JsonExtractor.extractFile`. A streamed split (fixtures past the
-    * whole-file threshold) lives next to the fixture it splits, which is
-    * kept for every later gate of the same run, like the fixture itself. */
+  /** The fixture file's canonical rows through the program's JSON path,
+    * `JsonExtractor.extractFile`. Its split lives next to the fixture it
+    * splits and is kept for every later gate of the same run, like the
+    * fixture itself. */
   def extractCanonical(spark: SparkSession, sfDir: String): DataFrame = {
     val path = writeFixture(spark, sfDir)
     graft.extract.JsonExtractor.extractFile(spark, path, HospitalName, Zip,

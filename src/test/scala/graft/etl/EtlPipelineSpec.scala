@@ -38,9 +38,7 @@ class EtlPipelineSpec extends SparkSpec {
       .withColumn("hospital_address", lit("1 Main St"))
       .write.parquet(registryPath)
 
-    val lake = s"$base/lake"
-    val res = EtlPipeline.run(spark, registryPath, "c1", base, "tester",
-      lakePath = Some(lake))
+    val res = EtlPipeline.run(spark, registryPath, "c1", base, "tester")
 
     // Tall explode: rows 1+2 (identical, deduped later) give 2 pairs each,
     // row 3 gives 1 pair → 5 extracted; dedup drops 2; "other" methodology
@@ -83,7 +81,11 @@ class EtlPipelineSpec extends SparkSpec {
       assert(EtlPipeline.systemRegistry(reg, "ACME HEALTH").count() == 1)
     } finally reg.unpersist()
 
-    // Lake landing: cleaned rows visible via the partition-pruned read.
+    // Lake landing: the run's cleaned CSV, appended to the partitioned
+    // lake, is visible through the partition-pruned read.
+    val lake = s"$base/lake"
+    graft.meta.Lake.writeCharges(spark.read.option("header", "true")
+      .schema(graft.core.Schemas.canonicalIngest).csv(res.cleanedPath), lake, system, "c1")
     assert(graft.meta.Lake.readCampus(spark, lake, "acme_health", "c1")
       .count() == res.cleanRows)
   }
@@ -114,6 +116,25 @@ class EtlPipelineSpec extends SparkSpec {
       EtlPipeline.run(spark, registryPath, "c1", base, "t")
     }
     assert(e.getMessage.contains("0 canonical rows"))
+
+    // The JSON path: a whitespace-only MRF has no root object, and an MRF
+    // without standard_charge_information extracts no rows.
+    Files.writeString(Paths.get(s"$base/data/raw data/s/blank.json"), "  \n ")
+    Files.writeString(Paths.get(s"$base/data/raw data/s/no-charges.json"),
+      """{ "hospital_name": "h", "version": "3.0.0" }""")
+    val jsonRegistry = s"$base/json-registry"
+    Seq(("j1", "s", "h", "z", "blank.json", "json"),
+        ("j2", "s", "h", "z", "no-charges.json", "json"))
+      .toDF("campus_id", "healthcare_system", "hospital_name", "zip_code",
+        "raw_filename", "structure").write.parquet(jsonRegistry)
+    for ((id, message) <- Seq("j1" -> "MRF root must be a JSON object",
+        "j2" -> "Extraction produced 0 canonical rows")) {
+      val e = intercept[IllegalArgumentException] {
+        EtlPipeline.run(spark, jsonRegistry, id, base, "t")
+      }
+      assert(e.getMessage.contains(message), id)
+      assert(!Files.exists(Paths.get(s"$base/data/scratch/s/${id}_mrf_split")), id)
+    }
   }
 
   test("a campus run that fails after caching releases its cached frames") {
@@ -125,14 +146,16 @@ class EtlPipelineSpec extends SparkSpec {
     Seq(("c1", "Acme Health", "General Hospital", "30303", "c1.csv", "tall csv"))
       .toDF("campus_id", "healthcare_system", "hospital_name", "zip_code",
         "raw_filename", "structure").write.parquet(registryPath)
-    // The lake write comes after the rule frame is materialized; a regular
-    // file at the lake path makes it throw.
-    val lake = Files.writeString(Paths.get(s"$base/lake"), "not a directory")
+    // The quarantine write comes after the rule frame is materialized and
+    // the clean write has run; a regular file where its parent directory
+    // belongs makes it throw.
+    Files.createDirectories(Paths.get(s"$base/data/logs"))
+    Files.writeString(Paths.get(s"$base/data/logs/rules violations"), "not a directory")
     val before = spark.sparkContext.getPersistentRDDs.size
     intercept[Exception] {
-      EtlPipeline.run(spark, registryPath, "c1", base, "t",
-        lakePath = Some(lake.toString))
+      EtlPipeline.run(spark, registryPath, "c1", base, "t")
     }
+    assert(Files.exists(Paths.get(s"$base/data/cleaned data/$system/c1_cleaned")))
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 

@@ -276,34 +276,98 @@ class ExtractorSpec extends SparkSpec {
     assert(e.getMessage.contains("zero rows"))
   }
 
-  test("MRF whole-file and streamed-split regimes extract identical rows and metadata") {
-    // the two-regime extractFile (r15: the 8g/100× screen caught the
-    // one-row whole-document materialization) must be a pure plan
-    // switch: same canonical rows, same metadata, from either path —
-    // also for a JSON null scalar, which the whole-file read gives as ""
-    // The split lives only in the caller's scratch directory, nothing is
-    // left under java.io.tmpdir, and the scratch is gone once removed.
+  /** Numeric tokens whose text a number round trip changes, a 20-digit
+    * integer code and a non-ASCII description. */
+  private val numericMrf =
+    """{ "hospital_name": "General", "version": 2.10,
+      |  "standard_charge_information": [
+      |    { "description": "Café MRI",
+      |      "code_information": [ {"code": 12345678901234567890, "type": "CPT"},
+      |                            {"code": 470, "type": "MS-DRG"} ],
+      |      "standard_charges": [
+      |        { "gross_charge": 12.10, "discounted_cash": 100.50, "setting": "outpatient",
+      |          "minimum": 1e3, "maximum": 1.5E2,
+      |          "payers_information": [
+      |            { "payer_name": "Aetna", "plan_name": "PPO",
+      |              "standard_charge_dollar": 100.50, "standard_charge_percentage": 1.5E2,
+      |              "estimated_amount": 1e3 } ] } ] } ] }
+      |""".stripMargin
+
+  /** A CMS v2-shaped header: array address and location, an object
+    * affirmation, and metadata after the charge array; a charge item's
+    * modifiers are an array over two lines. */
+  private val cmsV2Mrf =
+    """{ "hospital_name": "General",
+      |  "hospital_address": ["1 Main St", "Atlanta, GA"],
+      |  "hospital_location": [ "Main Campus",
+      |                         "East Wing" ],
+      |  "affirmation": { "affirmation": "To the best of its knowledge",
+      |                   "confirm_affirmation": true, "codes": [1, 2.50] },
+      |  "standard_charge_information": [
+      |    { "description": "Knee MRI",
+      |      "code_information": [ {"code": "73721", "type": "CPT"} ],
+      |      "standard_charges": [ { "gross_charge": 250.00, "setting": "outpatient",
+      |        "payers_information": [ { "payer_name": "Aetna", "modifiers": [ "26",
+      |                                                                     "TC" ] } ] } ] } ],
+      |  "last_updated_on": "2024-07-01", "version": "2.0.0" }
+      |""".stripMargin
+
+  test("the program's JSON path gives the multiLine read's rows and metadata") {
+    // extractFile (one streamed split, at every file size) against the
+    // whole-document multiLine read: the same canonical rows and the same
+    // devlog metadata, also for a JSON null scalar (""), and for numbers
+    // and arrays in string fields, which keep their source text (not a
+    // re-rendered number, whitespace included). The split lives only in the caller's scratch
+    // directory, nothing is left under java.io.tmpdir, and the scratch is
+    // gone once removed.
     val fixture = graft.queries.JsonMrfFixture.writeFixture(spark, sf("sf0.001"))
     val nullVersion = write("mrf-null-version.json",
       jsonMrf.replace("\"version\": \"2.0.0\"", "\"version\": null"))
+    val numeric = write("mrf-numeric.json", numericMrf)
+    val cmsV2 = write("mrf-cms-v2.json", cmsV2Mrf)
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     def tmpSplits = tmp.list().filter(_.startsWith("graft-mrf-split-")).toSet
     val splitsBefore = tmpSplits
     val scratchRoot = Files.createTempDirectory("graft-split-scratch")
-    for ((p, i) <- Seq(fixture, nullVersion).zipWithIndex) {
+    val got = Seq(fixture, nullVersion, numeric, cmsV2).zipWithIndex.map { case (p, i) =>
       val scratch = scratchRoot.resolve(s"split-$i")
-      val (whole, wholeMeta) = JsonExtractor.extractWholeFile(spark, p, "H", "Z")
-      val (split, splitMeta) =
-        JsonExtractor.extractStreamed(spark, p, "H", "Z", scratch.toString)
-      val wholeRows = whole.collect().map(_.toString).sorted.toSeq
-      assert(wholeRows.nonEmpty &&
-        wholeRows == split.collect().map(_.toString).sorted.toSeq)
-      assert(wholeMeta.keySet == JsonExtractor.MetadataKeys.toSet)
-      assert(splitMeta == wholeMeta)
-      assert(JsonExtractor.metadata(JsonExtractor.readMrf(spark, p)) == wholeMeta)
-      if (p == nullVersion) assert(splitMeta("version") == "")
-      assert(Files.exists(scratch.resolve("sci.jsonl")))
-    }
+      val mrf = JsonExtractor.readMrf(spark, p)
+      val (frame, meta) = JsonExtractor.extractFile(spark, p, "H", "Z", scratch.toString)
+      val rows = frame.collect().toSeq
+      assert(rows.nonEmpty, p)
+      assert(rows.map(_.toString).sorted ==
+        JsonExtractor.extract(mrf, "H", "Z").collect().map(_.toString).sorted.toSeq, p)
+      assert(meta.keySet == JsonExtractor.MetadataKeys.toSet, p)
+      assert(meta == JsonExtractor.metadata(mrf), p)
+      assert(Files.exists(scratch.resolve("sci.jsonl")), p)
+      p -> (rows, meta)
+    }.toMap
+    assert(got(nullVersion)._2("version") == "")
+
+    val (numericRows, numericMeta) = got(numeric)
+    assert(numericMeta("version") == "2.10")
+    assert(numericRows.map(r => (r.getAs[String]("code"), r.getAs[String]("code type"),
+      r.getAs[String]("description"), r.getAs[String]("gross charge"),
+      r.getAs[String]("discounted cash price"), r.getAs[String]("min price"),
+      r.getAs[String]("max price"), r.getAs[String]("negotiated price"),
+      r.getAs[String]("negotiated percentage"), r.getAs[String]("estimated amount")))
+      .sortBy(_._1) == Seq(
+        ("12345678901234567890", "CPT", "Café MRI", "12.10", "100.50", "1e3", "1.5E2",
+          "100.50", "1.5E2", "1e3"),
+        ("470", "DRG", "Café MRI", "12.10", "100.50", "1e3", "1.5E2",
+          "100.50", "1.5E2", "1e3")))
+
+    val (cmsRows, cmsMeta) = got(cmsV2)
+    def twoLines(text: String, first: String, second: String) =
+      text.startsWith(s"[ $first,\n") && text.endsWith(s" $second ]") &&
+        text.count(_ == '\n') == 1
+    assert(cmsMeta - "hospital_location" == Map("hospital_name" -> "General",
+      "hospital_address" -> """["1 Main St", "Atlanta, GA"]""",
+      "last_updated_on" -> "2024-07-01", "version" -> "2.0.0"))
+    assert(twoLines(cmsMeta("hospital_location"), "\"Main Campus\"", "\"East Wing\""))
+    assert(cmsRows.map(_.getAs[String]("gross charge")) == Seq("250.00"))
+    assert(twoLines(cmsRows.head.getAs[String]("modifiers"), "\"26\"", "\"TC\""))
+
     assert(tmpSplits == splitsBefore)
     val walked = Files.walk(scratchRoot)
     try walked.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
